@@ -726,6 +726,7 @@ object DeleteVectors {
       try {
         allDv.repartition(partCols.map(c => col(s"`$c`")): _*)
           .write.partitionBy(partCols: _*).mode("overwrite")
+          .options(VersionedTables.NoSuccessMarker)
           .parquet(tmp.toString)
         affected.foreach { p =>
           val src = new org.apache.hadoop.fs.Path(tmp, p.toHivePath)

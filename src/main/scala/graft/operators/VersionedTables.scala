@@ -63,14 +63,15 @@ final class VersionedTables(
   def restore(table: TableName, id: CommitId, userId: UserId, message: String): (TableUpdate, TableChanges) =
     versioned.restore(table, id, userId, message)
 
-  /** Read the table at its current version. mergeSchema tables resolve
-    * their (possibly evolved) schema from the commit log when it recorded
-    * one — planning then opens no footers — via [[graft.core
-    * .VersionTracker.headState]], which the persistent stores serve from
-    * their fold checkpoint + commit tail: the per-statement cost of reading
-    * a 100k-commit streaming-sink table is O(partitions + tail), never a
-    * history materialization. Other tables keep the version-only fast
-    * path. */
+  /** Read the table at its current version. Every table whose history
+    * recorded a schema (`SetTableSchema`) reads under that schema —
+    * planning then opens no footers — resolved with the version map in one
+    * [[graft.core.VersionTracker.headState]] call, which the persistent
+    * stores serve from their fold checkpoint + commit tail: the
+    * per-statement cost of reading a 100k-commit streaming-sink table is
+    * O(partitions + tail), never a history materialization. Histories that
+    * never recorded a schema (adopted, imported, pre-upgrade) infer it from
+    * the data files. */
   def read(table: TableDefinition): DataFrame = {
     // The LOG-RECORDED schema (SetTableSchema) serves as the reader schema
     // whenever the history carries one — for ANY table, not just
@@ -183,7 +184,10 @@ final class VersionedTables(
     * in exactly one write task → exactly one file. With `filesPerPartition =
     * F > 1`, rows are round-robined into exactly F tasks, each writing one
     * file per partition it holds → exactly F files for every large partition
-    * (fewer for partitions with < F rows). Use F > 1 together with `keep` to
+    * (fewer for partitions with < F rows). Both are explicit repartitions,
+    * so the shared writer's small-input rule ([[VersionedTables
+    * .writeDataVersioned]]: one task for inputs under AQE's minimum
+    * partition size) leaves them as they are. Use F > 1 together with `keep` to
     * spread a few oversized partitions across F parallel writers; the
     * default is right for the common many-partitions case.
     *
@@ -1225,6 +1229,17 @@ object VersionedTables {
       * Readers never see in-flight data — new `_version` dirs are unreferenced
       * until the commit lands.
       *
+      * File layout ([[VersionedTables.writeDataVersioned]]): a `ds` whose
+      * analyzed size estimate is at most
+      * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+      * default) is written by one task — one file per touched partition.
+      * A `ds` that ends in an explicit
+      * `repartition`/`coalesce`/`repartitionByRange`/`REBALANCE`, whose
+      * estimate can undercount (`explode`, typed object operators,
+      * Python/Arrow functions) or would cost a scan plan (a DataSource V2
+      * input), or that is larger, keeps one file per input slice and
+      * partition.
+      *
       * The schema-drift guard on this UNGUARDED variant is read-then-act: it
       * verifies against the head at guard time, so an insert racing a
       * concurrent schema-changing [[versionedReplaceAll]] can still commit
@@ -1560,23 +1575,96 @@ object VersionedTables {
 
   /** Physically write `df` under `_version=<label>` directories via Spark's
     * dynamic partitioning — the one shared data writer behind every
-    * insert/replace/stage/merge entry point (zero custom I/O; the version
-    * column rides `partitionBy`). */
+    * insert/replace/stage/merge/DML/fold entry point (zero custom I/O; the
+    * version column rides `partitionBy`).
+    *
+    * Layout rule: a SMALL input runs as ONE write task, so each partition
+    * it touches gets one data file. Small means the size estimate of the
+    * plan `df` has already analyzed is at most Spark's
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+    * default) — the smallest partition AQE's coalescing leaves, so a
+    * shuffle of this size would be one partition too; the input is then
+    * coalesced to one partition — no shuffle, no extra job, no optimizer
+    * pass. The cost of a small versioned write is per task and per file,
+    * not per row: every task ships the session's Hadoop configuration and
+    * every file written is a file each later read opens. Past a few MB the
+    * lost parallelism costs more wall time than the tasks save (8 MB
+    * inputs wrote ~50% slower as one task on 4 cores), so the cutoff is
+    * the 1 MB floor, not the 64 MB advisory size. The input keeps its own
+    * layout when
+    *   - the caller fixed it: an explicit `repartition`, `coalesce`,
+    *     `repartitionByRange` or `REBALANCE` at the top of the plan (only
+    *     projections, filters, observations and local sorts above it) —
+    *     `compact(filesPerPartition = F)` and [[VersionedTables
+    *     .foldDeleteVectors]] rely on this;
+    *   - the estimate can undercount the output: the plan holds a
+    *     `Generate` (`explode`), a typed object operator (`map`,
+    *     `flatMap`, `mapPartitions`, …) or a Python/Arrow function;
+    *   - its estimate is not free: a leaf other than a file relation, a
+    *     local relation, an RDD or a range (a DataSource V2 relation
+    *     estimates itself by building a scan before any pushdown).
+    * Large inputs keep one file per input slice and partition, as before.
+    * The coalesce also runs the input's last stage in that one task: a
+    * small input whose last stage is compute-heavy (e.g. a costly UDF
+    * over a small scan) keeps its parallelism with an explicit
+    * `repartition`.
+    *
+    * No `_SUCCESS` marker is written at the table root: a staged or
+    * CAS-refused write would leave the same marker, so it says nothing
+    * about committed data — the commit is the success marker. */
   private[operators] def writeDataVersioned(
       df: DataFrame, table: TableDefinition, version: Version,
       clusterBy: Seq[String] = Nil): Unit = {
     val partCols = table.partitionSchema.columnNames :+ Version.VersionColumn
     val versioned = df.withColumn(Version.VersionColumn, lit(version.label))
+    val packed = if (writesAsOneTask(df)) versioned.coalesce(1) else versioned
     val arranged =
-      if (clusterBy.isEmpty) versioned
-      else versioned.sortWithinPartitions(
+      if (clusterBy.isEmpty) packed
+      else packed.sortWithinPartitions(
         (partCols ++ clusterBy).map(org.apache.spark.sql.functions.col): _*)
     arranged.write
       .partitionBy(partCols: _*)
       .mode(SaveMode.Append)
       .format(table.format.name)
       .options(table.options)
+      .options(NoSuccessMarker)
       .save(VersionedTables.uriToLoadPath(table.location))
+  }
+
+  /** Hadoop's `FileOutputCommitter` switch for the `_SUCCESS` file, as a
+    * write option (the writer copies its options into the job's Hadoop
+    * configuration). */
+  private[operators] val NoSuccessMarker =
+    Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
+  /** The layout rule of [[writeDataVersioned]]: true when `df` should be
+    * written by one task. Reads only the already-analyzed plan, and asks
+    * it for statistics only when every leaf estimates itself for free. */
+  private[operators] def writesAsOneTask(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.PythonFuncExpression
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val plan = df.queryExecution.analyzed
+    @annotation.tailrec
+    def callerFixedLayout(p: LogicalPlan): Boolean = p match {
+      case _: RepartitionOperation | _: RebalancePartitions => true
+      case u @ (_: Project | _: Filter | _: CollectMetrics | _: SubqueryAlias) =>
+        callerFixedLayout(u.children.head)
+      case s: Sort if !s.global => callerFixedLayout(s.child)
+      case _ => false
+    }
+    def mayUndercount(p: LogicalPlan): Boolean = p.exists {
+      case _: Generate | _: ObjectProducer | _: ObjectConsumer => true
+      case n => n.expressions.exists(_.exists(_.isInstanceOf[PythonFuncExpression]))
+    }
+    def freeStats(p: LogicalPlan): Boolean = p.collectLeaves().forall {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation |
+           _: LocalRelation | _: org.apache.spark.sql.execution.LogicalRDD |
+           _: Range | _: OneRowRelation => true
+      case _ => false
+    }
+    !callerFixedLayout(plan) && !mayUndercount(plan) && freeStats(plan) &&
+      plan.stats.sizeInBytes <= org.apache.spark.sql.GraftSqlBridge.sqlConf(df.sparkSession)
+        .getConf(org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
   }
 
   /** Convenience constructor: engine with a file-backed commit log stored

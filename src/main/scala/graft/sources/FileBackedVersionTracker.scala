@@ -277,26 +277,28 @@ final class FileBackedVersionTracker(
       CommitId(readWithRetry(new Path(dir, HeadFile)).trim)
     }
 
-  /** Paged history from the commit-file LISTING: file-name order == commit
-    * order (graft layout) or the reference's (mtime, name) order (chronicles
-    * layout), so the page is a sorted slice of the listing and ONLY its
-    * files are parsed — O(listing) + O(page) document reads, vs
-    * `tableState`'s O(#commits) parse. The streaming-sink `log` case. */
+  /** Paged history. A graft-layout page that fits inside the head
+    * manifest's tail (`offset + limit` ≤ tail size: the newest pages a
+    * `log` call asks for) is served from the manifest with zero directory
+    * listings, like [[updatesPage]]'s first page. Any other page comes
+    * from the commit-file LISTING: file-name order == commit order (graft
+    * layout) or the reference's (mtime, name) order (chronicles layout), so
+    * the page is a sorted slice of the listing and ONLY its files are
+    * parsed — O(listing) + O(page) document reads, vs `tableState`'s
+    * O(#commits) parse. The streaming-sink `log` case. */
   override def updates(table: TableName, limit: Int, offset: Int): List[TableUpdateMetadata] = {
     VersionTracker.requireValidPage(limit, offset)
-    val page = resolveTableDir(table) match {
+    val end = (offset.toLong + limit).min(Int.MaxValue).toInt
+    resolveTableDir(table) match {
       case (dir, GraftLayout) =>
-        listStatusCounted(dir).map(_.getPath)
-          .filter(p => p.getName.startsWith(CommitFilePrefix) && p.getName.endsWith(".json"))
-          .sortBy(_.getName).reverse
+        manifestNewestPage(dir, limit, None, offset).map(_._1).getOrElse(
+          pagedGraftListing(dir).reverse.slice(offset, end).map(f => parseCommitFile(f._2).metadata))
       case (dir, ChroniclesLayout) =>
         listStatusCounted(dir)
           .filter(s => s.getPath.getName.startsWith(CommitFilePrefix))
           .sortBy(s => (s.getModificationTime, s.getPath.getName)).reverse
-          .map(_.getPath)
+          .slice(offset, end).map(s => parseCommitFile(s.getPath).metadata)
     }
-    page.slice(offset, (offset.toLong + limit).min(Int.MaxValue).toInt)
-      .map(p => parseCommitFile(p).metadata)
   }
 
   /** Keyset page off the commit-file LISTING: the cursor is the last-seen
@@ -315,7 +317,7 @@ final class FileBackedVersionTracker(
       case (dir, GraftLayout) =>
         if (limit == 0) (Nil, after)
         else manifestNewestPage(dir, limit, after).getOrElse(
-          keysetPage(graftNameListing(dir).reverse, limit, after,
+          keysetPage(pagedGraftListing(dir).reverse, limit, after,
             isPast = (k: String, a: String) => k < a,
             renderCursor = identity[String])(p => parseCommitFile(p).metadata))
       case (dir, ChroniclesLayout) =>
@@ -333,18 +335,19 @@ final class FileBackedVersionTracker(
     * serves it; the cursor is the commit file name either way, so a walk
     * can start on the manifest and continue seamlessly into the listing.
     * (A crashed writer's ORPHAN commit file — present on disk, absent from
-    * the manifest — is the one divergence from the listing page: the
-    * manifest page skips it until the next checkpoint folds it into the
-    * covered prefix. Orphans are unreachable crash debris; both paths agree
-    * on every committed history.) */
+    * the manifest — is skipped here until the next checkpoint folds it
+    * into the covered prefix; [[pagedGraftListing]] skips it too, so both
+    * paths serve the same pages.) `skip` drops that many further commits
+    * first — the offset form of [[updates]]. */
   private def manifestNewestPage(
-      dir: Path, limit: Int, after: Option[String]): Option[(List[TableUpdateMetadata], Option[String])] =
+      dir: Path, limit: Int, after: Option[String],
+      skip: Int = 0): Option[(List[TableUpdateMetadata], Option[String])] =
     readManifest(dir).filter(_.foldDoc.nonEmpty).flatMap { m =>
       val newestFirst = m.tail.reverse
-      val anchored = after match {
+      val anchored = (after match {
         case None    => newestFirst
         case Some(a) => newestFirst.dropWhile(_ >= a)
-      }
+      }).drop(skip)
       if (anchored.size < limit) None // page would cross the fold boundary
       else {
         val page = anchored.take(limit)
@@ -406,6 +409,21 @@ final class FileBackedVersionTracker(
       .filter(p => p.getName.startsWith(CommitFilePrefix) && p.getName.endsWith(".json"))
       .map(p => (p.getName, p))
       .sortBy(_._1)
+
+  /** [[graftNameListing]] for the newest-first log pages: under a HEALTHY
+    * head manifest, commit files past its fold boundary that its tail does
+    * not name (a crashed writer's orphan, or a commit still landing) are
+    * dropped — the manifest-served pages skip them too, so a page walk
+    * that starts on the manifest and continues on the listing never sees
+    * a commit twice or out of place. */
+  private def pagedGraftListing(dir: Path): List[(String, Path)] = {
+    val known = readManifest(dir).filter(_.foldDoc.nonEmpty)
+    val listed = graftNameListing(dir)
+    known.fold(listed) { m =>
+      val tail = m.tail.toSet
+      listed.filter { case (n, _) => n <= m.lastCovered || tail(n) }
+    }
+  }
 
   /** Chronicles-layout commit files keyed+sorted ASCENDING by the
     * reference's (mtime, name) order; `.reverse` for newest-first. */

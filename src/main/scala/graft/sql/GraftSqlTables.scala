@@ -389,7 +389,23 @@ final case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPla
     require(e.deterministic,
       "DELETE/UPDATE conditions on graft tables must be deterministic")
     org.apache.spark.sql.GraftSqlBridge.column(
-      e.transform { case a: AttributeReference => UnresolvedAttribute.quoted(a.name) })
+      inlineCommonExpressions(e).transform {
+        case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+      })
+  }
+
+  /** Inline every `With` common expression (Spark 4.1 analyzes `BETWEEN`
+    * into one, so the tested value is computed once) back into its uses.
+    * A `With` cannot hold name-unresolved attributes: rebuilding it asks
+    * each definition for its data type, so the by-name re-expressions
+    * below would throw on any `BETWEEN`. The conditions are deterministic,
+    * so evaluating a definition at each use is the same predicate. */
+  private def inlineCommonExpressions(e: Expression): Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{CommonExpressionRef, With}
+    e.transformUp { case w: With =>
+      val defs = w.defs.map(d => d.id -> d.child).toMap
+      w.child.transformUp { case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id) }
+    }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -640,7 +656,7 @@ final case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPla
         "subqueries in MERGE clauses on graft tables are not supported — " +
           "materialize the subquery into the source query")
       require(e.deterministic, "MERGE clause expressions on graft tables must be deterministic")
-      org.apache.spark.sql.GraftSqlBridge.column(e.transform {
+      org.apache.spark.sql.GraftSqlBridge.column(inlineCommonExpressions(e).transform {
         case a: AttributeReference if sourceOut.contains(a) =>
           UnresolvedAttribute(Seq("s", a.name))
         case a: AttributeReference if targetOut.contains(a) =>

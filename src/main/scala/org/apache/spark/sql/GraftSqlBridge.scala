@@ -24,6 +24,11 @@ object GraftSqlBridge {
   def functionRegistry(spark: SparkSession): catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
 
+  /** The session's SQL configuration, typed (`sessionState` is
+    * `private[sql]`) — for reading Spark's own byte-size settings. */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** A DataFrame over an already-analyzed logical plan (`Dataset.ofRows` is
     * `private[sql]`) — how the SQL INSERT command materializes its source
     * query for the versioned write path. */

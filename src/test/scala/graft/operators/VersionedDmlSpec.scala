@@ -134,6 +134,33 @@ class VersionedDmlSpec extends AnyFlatSpec with Matchers {
     engine.read(table).count() shouldBe 0
   }
 
+  it should "delete and update the same rows for BETWEEN as for >= AND <=, in rewrite and dv mode" in {
+    def rowsOf(engine: VersionedTables, table: TableDefinition) =
+      engine.read(table).select("id", "day", "v").collect()
+        .map(r => (r.getLong(0), r.get(1).toString, Option(r.get(2)).map(_.toString))).toSeq.sorted
+    for (mode <- Seq("rewrite", "dv")) {
+      spark.conf.set(graft.sql.GraftSqlWrites.DeleteModeKey, mode)
+      spark.conf.set(graft.sql.GraftSqlWrites.UpdateModeKey, mode)
+      try {
+        val results = Seq("id BETWEEN 3 AND 5", "id >= 3 AND id <= 5").map { range =>
+          val (engine, table) = fixture()
+          val t = s"graft.${table.name.fullyQualifiedName}"
+          spark.sql(s"DELETE FROM $t WHERE day = '2024-01-01' AND $range")
+          spark.sql(s"UPDATE $t SET v = CAST(-1 AS DOUBLE) WHERE day = '2024-01-02' AND $range")
+          rowsOf(engine, table)
+        }
+        withClue(s"mode $mode: ") {
+          results(0) shouldBe results(1)
+          results(0) should have size (1600 - 3)
+          results(0).count(_._3.contains("-1.0")) shouldBe 3
+        }
+      } finally {
+        spark.conf.unset(graft.sql.GraftSqlWrites.DeleteModeKey)
+        spark.conf.unset(graft.sql.GraftSqlWrites.UpdateModeKey)
+      }
+    }
+  }
+
   it should "refuse subqueries and keep the statement loud" in {
     val (engine, table) = fixture()
     val t = s"graft.${table.name.fullyQualifiedName}"
@@ -183,6 +210,17 @@ class VersionedDmlSpec extends AnyFlatSpec with Matchers {
     spark.sql(s"MERGE INTO $t AS tgt USING $src AS s ON tgt.id = s.id WHEN MATCHED THEN DELETE")
     engine.read(table).select("id").as[String].collect().sorted shouldBe
       Array("a2", "a4") // a1/a3 matched and removed; a5 unmatched no-op
+  }
+
+  it should "accept BETWEEN in merge clause conditions" in {
+    val (engine, table, t, src) = mergeFixture()
+    spark.sql(
+      s"""MERGE INTO $t AS tgt USING $src AS s ON tgt.id = s.id
+         |WHEN MATCHED AND s.balance BETWEEN 0 AND 15 THEN UPDATE SET balance = s.balance + 1""".stripMargin)
+    val got = engine.read(table).select("id", "balance")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // only a1 (source balance 11) is in range; a3 (-1) keeps its row
+    got shouldBe Map("a1" -> 12L, "a2" -> 20L, "a3" -> 30L, "a4" -> 40L)
   }
 
   it should "route a partial-column UPDATE (no insert clause) through the general merge" in {

@@ -182,6 +182,49 @@ class HeadManifestSpec extends AnyFlatSpec with Matchers {
     tracker(root).updatesPage(t, 10, None)._1 shouldBe byListing.take(10)
   }
 
+  it should "serve offset log pages inside the tail with zero listings, exactly like the listing path" in {
+    val root = Files.createTempDirectory("graft-manifest-offset-")
+    val w = tracker(root)
+    w.initTable(t, isSnapshot = false, u, "init", Instant.now())
+    commitN(w, 1 to 11) // two checkpoints, a short tail past the second
+    val tailSize = readManifest(root).tail.size
+    tailSize should be >= 3
+
+    val byListing = w.tableState(t).updates.reverse.map(_.metadata)
+    val inTail = tracker(root)
+    inTail.updates(t, 2, 0) shouldBe byListing.take(2)
+    inTail.updates(t, 1, 2) shouldBe byListing.slice(2, 3)
+    inTail.updates(t, tailSize, 0) shouldBe byListing.take(tailSize)
+    inTail.directoryListings.get() shouldBe 0L
+    // every page, inside the tail or crossing the checkpoint, matches
+    for (limit <- 0 to 13; offset <- 0 to 13)
+      withClue(s"limit $limit offset $offset: ") {
+        tracker(root).updates(t, limit, offset) shouldBe byListing.slice(offset, offset + limit)
+      }
+    val crossing = tracker(root)
+    crossing.updates(t, 3, tailSize - 1) shouldBe byListing.slice(tailSize - 1, tailSize + 2)
+    crossing.directoryListings.get() shouldBe 1L // the fallback still lists
+
+    // a crashed writer's ORPHAN commit file (on disk, absent from the
+    // manifest) is skipped by both paths: a walk that starts on the
+    // manifest and crosses into the listing sees every commit exactly once
+    val orphan = TableUpdate(u, "orphan", Instant.now(),
+      List(TableOperation.AddPartitionVersion(Partition("day", "d999"), Version.generate())))
+    Files.write(tableDir(root).resolve(FileBackedVersionTracker.CommitFilePrefix + "29990101T000000.000000000Z.json"),
+      JsonCodecs.toJson(orphan).getBytes("UTF-8"))
+    for (limit <- 1 to 13; offset <- 0 to 13)
+      withClue(s"orphan planted, limit $limit offset $offset: ") {
+        tracker(root).updates(t, limit, offset) shouldBe byListing.slice(offset, offset + limit)
+      }
+    Iterator.from(0, 2).map(tracker(root).updates(t, 2, _)).takeWhile(_.nonEmpty)
+      .flatten.toList shouldBe byListing
+    def keysetWalk(cursor: Option[String]): List[TableUpdateMetadata] = {
+      val (page, next) = tracker(root).updatesPage(t, 2, cursor)
+      page ++ next.fold(List.empty[TableUpdateMetadata])(c => keysetWalk(Some(c)))
+    }
+    keysetWalk(None) shouldBe byListing
+  }
+
   it should "resolve parentCommit of tail ids with zero listings (and boundary/covered ids exactly)" in {
     val root = Files.createTempDirectory("graft-manifest-parent-")
     val w = tracker(root)
