@@ -34,12 +34,18 @@ import org.apache.spark.sql.functions._
  *
  * Keys must identify a row uniquely WITHIN each compared slice — the same
  * precondition SQL MERGE and `mergeInto` carry; `requireDistinctKeys`
- * (default on) pins it with a per-key count fused into the compare's own
- * aggregation (a violated slice raises at the feed's first action — no
- * separate probe pass, no eager job at construction). Rows with any NULL
- * key column never equi-match, so a rewritten partition reports an old
- * null-key row as `delete` and a new one as `insert` — the honest answer,
- * since no pairing exists.
+ * (default on) checks it with a per-key count fused into the compare's own
+ * aggregation — no separate probe pass, no eager job at construction. The
+ * check runs only where the guarded rows are evaluated, so it is
+ * best-effort: an action that evaluates every row of the feed (`collect`,
+ * a write) raises on a violated slice, but one that evaluates part of it
+ * may not — a filter on key columns that Spark pushes below the per-key
+ * aggregation, or `limit`/`take`/`show`, which stop early. Callers that
+ * need the refusal under such plans evaluate the unfiltered feed once, or
+ * de-duplicate the keys themselves. Rows with any NULL key column never
+ * equi-match, so a rewritten partition reports an old null-key row as
+ * `delete` and a new one as `insert` — the honest answer, since no pairing
+ * exists.
  */
 object ChangeFeed {
 
@@ -191,16 +197,12 @@ object ChangeFeed {
     val missing = keyColumns.filterNot(cols.contains)
     require(missing.isEmpty, s"key columns not in table: ${missing.mkString(", ")}")
     val rowStruct = struct(cols.map(col): _*)
-    // The distinct-keys precondition rides the diff plan itself (round 17):
-    // each side pre-aggregates by key on the SAME hash exchange the
-    // full-outer compare needs anyway, and a key counted >1 raises from
-    // inside the job (null-key rows group together and so still refuse,
-    // exactly like the former probe). The previous shape ran an EAGER
-    // groupBy/count/collect probe per side at frame-CONSTRUCTION time —
-    // two extra full scan+shuffle actions before the first real action of
-    // every feed — so the refusal now surfaces at the first action on the
-    // feed instead of at construction, as a runtime error carrying the
-    // same message.
+    // The distinct-keys precondition rides the diff plan itself: each side
+    // pre-aggregates by key on the SAME hash exchange the full-outer
+    // compare needs anyway, and a key counted >1 raises from inside the job
+    // (null-key rows group together and so still refuse) — no eager probe
+    // action per side at construction. So it raises only in an action that
+    // evaluates the duplicated key's group (see the class doc).
     def sided(df: DataFrame, alias: String): DataFrame =
       df.select(keyColumns.map(col) :+ rowStruct.as(alias): _*)
     def guarded(df: DataFrame, side: String, alias: String): DataFrame = {

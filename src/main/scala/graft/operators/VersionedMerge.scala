@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+import org.apache.spark.sql.functions.{coalesce, lit, not}
 
 /**
  * Keyed MERGE INTO for versioned tables — the Delta/Iceberg `MERGE` verb the
@@ -22,35 +22,10 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, not}
  *     Only a TRUE predicate deletes — a NULL falls through to UPDATE,
  *     SQL's three-valued WHEN-clause rule.
  *
- * Scale shape (the 100 TB contract):
- *   - The rewrite is PARTITION-granular and touches ONLY partitions that the
- *     merge affects: partitions holding a matched key (found by ONE
- *     semi-join of the current table against the distinct source keys —
- *     broadcastable when the source is small, AQE handles the rest) plus
- *     partitions the upsert rows land in. An untouched partition keeps its
- *     existing version directory — zero data movement, exactly like the
- *     insert path.
- *   - The DISCOVERY pass (which partitions hold a matched key?) is itself
- *     pruned before any file is listed, in three escalating steps:
- *     (1) when the merge keys CONTAIN the partition columns, candidates are
- *     exactly the source keys' partition-value tuples intersected with the
- *     live partition set — zero scan; (2) when the table declares a
- *     [[graft.core.ColumnStatsConfig]], partitions whose per-file key
- *     min/max ranges (or single partition-column values) are disjoint from
- *     the source keys' range — or whose key column is entirely null, which
- *     can never equi-match — are skipped; (3) partitions carrying a
- *     manifest Bloom filter over the key tuple are probed with the source
- *     key hashes in ONE small job (no false negatives, so no partition
- *     that holds a match is ever skipped). Only the surviving candidates
- *     are semi-joined, so a 3-partition merge into a 10,000-partition
- *     table reads 3 partitions, not the table.
- *   - The rewritten content is `touched ⟕anti source.keys ∪ upserts` — one
- *     anti-join shuffled on the key (again broadcastable), never a full
- *     table scan beyond the touched slice — and it is persisted across its
- *     two consumers (final-partition discovery and the physical write), so
- *     the touched slice is read ONCE; callers merging an expensive source
- *     plan should still `persist` the SOURCE, which feeds the discovery
- *     semi-join and the dup-key check before the merged plan exists.
+ * `mergeInto` runs on the one MERGE engine, [[MergeApply]], as `WHEN
+ * MATCHED AND deleteWhen THEN DELETE / WHEN MATCHED THEN UPDATE SET * /
+ * WHEN NOT MATCHED AND NOT coalesce(deleteWhen, false) THEN INSERT *` —
+ * its whole-row replace shape (pruning and scale contract there).
  */
 object VersionedMerge {
 
@@ -64,179 +39,19 @@ object VersionedMerge {
       rewritten: List[Partition],
       removed: List[Partition])
 
-  /** Partitions that might probe over one bloom job; above this, the probe
-    * cost (|source keys| × |candidate blooms|) stops paying for itself and
-    * the semi-join over the range-surviving candidates takes over. */
-  private val MaxBloomProbePartitions = 512
-
-  /**
-   * The partitions of `pvs` that CAN hold a key present in `keyFrame` —
-   * a superset of the truly-matched set (every prune step is free of false
-   * negatives), so the exact semi-join over just these candidates yields
-   * the same `matchedParts` a full-table scan would.
-   *
-   *   1. keys ⊇ partition columns: candidates = the source keys' partition
-   *      tuples ∩ live partitions. Exact at tuple granularity, zero scan.
-   *   2. Stats manifests ([[TableStats]]): per key column, a partition is
-   *      dropped when its value/min-max range is disjoint from the source
-   *      keys' [min, max], or its key column is entirely null (null never
-   *      equi-matches — detected by the exact nullCount==rows, NOT by
-   *      absent min/max, which NaN also causes). Versions without a
-   *      manifest always stay.
-   *   3. Manifest Blooms over the key tuple: surviving partitions' filters
-   *      are probed with `xxhash64(key tuple)` of every source key in ONE
-   *      job against broadcast filters (bounded by
-   *      [[MaxBloomProbePartitions]]).
-   */
-  private[operators] def candidatePartitions(
-      engine: VersionedTables,
-      table: TableDefinition,
-      pvs: Map[Partition, Version],
-      keyFrame: DataFrame,
-      keyColumns: Seq[String]): Map[Partition, Version] = {
-    if (pvs.isEmpty) return pvs
-    val keyLower = keyColumns.map(_.toLowerCase)
-    val partCols = table.partitionSchema.columnNames
-
-    // (1) keys contain the partition columns → pure value intersection
-    if (partCols.forall(pc => keyLower.contains(pc.toLowerCase))) {
-      val sourceTuples =
-        VersionedTables.partitionValues(keyFrame, table.partitionSchema).toSet
-      return pvs.filter { case (p, _) => sourceTuples(p) }
-    }
-
-    val cfg = table.stats.getOrElse(return pvs)
-    val conf = engine.spark.sparkContext.hadoopConfiguration
-    val manifests = scala.collection.mutable.Map.empty[String, Option[TableStats.StatsManifest]]
-    def manifestFor(v: Version): Option[TableStats.StatsManifest] =
-      manifests.getOrElseUpdate(v.label, TableStats.readManifestCached(conf, table.location, v.label))
-
-    // (2) range pruning: the source keys' per-column [min, max], computed in
-    // one tiny agg over the (small) key frame and normalized through the
-    // SAME codec the manifest values use
-    val keyTypes = keyColumns.map(k => k -> keyFrame.schema(k).dataType.catalogString).toMap
-    val aggs = keyColumns.flatMap(k =>
-      Seq(org.apache.spark.sql.functions.min(col(k)), org.apache.spark.sql.functions.max(col(k))))
-    val bounds = keyFrame.agg(aggs.head, aggs.tail: _*).head()
-    val sourceRange: Map[String, (Option[TableStats.StatVal], Option[TableStats.StatVal])] =
-      keyColumns.zipWithIndex.map { case (k, i) =>
-        def v(j: Int) = Option(bounds.get(j)).flatMap(TableStats.encodeValue)
-          .flatMap(TableStats.decodeStored(keyTypes(k), _))
-        k.toLowerCase -> ((v(2 * i), v(2 * i + 1)))
-      }.toMap
-
-    def disjoint(
-        pMin: Option[TableStats.StatVal], pMax: Option[TableStats.StatVal],
-        sMin: Option[TableStats.StatVal], sMax: Option[TableStats.StatVal]): Boolean = {
-      val aboveAll = (pMin, sMax) match {
-        case (Some(a), Some(b)) => TableStats.compareVals(a, b).exists(_ > 0)
-        case _ => false
-      }
-      val belowAll = (pMax, sMin) match {
-        case (Some(a), Some(b)) => TableStats.compareVals(a, b).exists(_ < 0)
-        case _ => false
-      }
-      aboveAll || belowAll
-    }
-
-    val rangeSurvivors = pvs.filter { case (p, v) =>
-      manifestFor(v) match {
-        case None => true // no manifest: cannot prune this version
-        case Some(m) =>
-          val files = m.filesFor(p.toHivePath)
-          if (files.isEmpty) true
-          else {
-            val partVals = p.columnValues
-              .map(cv => cv.column.name.toLowerCase -> cv.value).toMap
-            val provablyUnmatched = keyLower.exists { k =>
-              val (sMin, sMax) = sourceRange.getOrElse(k, (None, None))
-              partVals.get(k) match {
-                case Some(raw) =>
-                  // key column IS a partition column: one exact value
-                  if (raw == PathCodec.DefaultPartitionName) true // null never matches
-                  else sMin.orElse(sMax) match {
-                    case Some(like) => TableStats.partitionValueAs(raw, like)
-                      .exists(pv => disjoint(Some(pv), Some(pv), sMin, sMax))
-                    case None => false
-                  }
-                case None if m.statsColumns.contains(k) =>
-                  val perFile = files.map(f => f.columns.get(k).map(cs => (cs, f.rows)))
-                  if (perFile.exists(_.isEmpty)) false // some file unknown: keep
-                  else {
-                    val known = perFile.flatten
-                    // prunable iff EVERY file provably holds no matching key:
-                    // all-null files, or a decoded range disjoint from the
-                    // source keys' range
-                    known.nonEmpty && known.forall { case (cs, rows) =>
-                      cs.nullCount >= rows ||
-                        ((cs.min.flatMap(TableStats.decodeStored(cs.dataType, _)),
-                          cs.max.flatMap(TableStats.decodeStored(cs.dataType, _))) match {
-                          case (Some(lo), Some(hi)) =>
-                            disjoint(Some(lo), Some(hi), sMin, sMax)
-                          case _ => false
-                        })
-                    }
-                  }
-                case None => false
-              }
-            }
-            !provablyUnmatched
-          }
-      }
-    }
-
-    // (3) Bloom probe over the range survivors' filters, when the manifest
-    // blooms cover exactly the merge key set. Self-describing formats only:
-    // xxhash64 is TYPE-sensitive, and only the parquet/orc schema-drift
-    // guard pins the source column types to the written ones — a text
-    // format's re-inferred int-vs-long drift would silently change the hash
-    // domain and fabricate false negatives.
-    val bloomOrder = cfg.bloomKeyColumns
-    val bloomsUsable = bloomOrder.nonEmpty &&
-      bloomOrder.map(_.toLowerCase).toSet == keyLower.toSet &&
-      (table.format == FileFormat.Parquet || table.format == FileFormat.Orc)
-    if (!bloomsUsable) return rangeSurvivors
-    val withBlooms = rangeSurvivors.toList.flatMap { case (p, v) =>
-      manifestFor(v)
-        .filter(m => m.bloomKeyColumns.map(_.toLowerCase).toSet == keyLower.toSet)
-        .flatMap(_.partitionBlooms.get(p.toHivePath))
-        .map(bytes => (p, v, bytes))
-    }
-    if (withBlooms.isEmpty || withBlooms.size > MaxBloomProbePartitions) return rangeSurvivors
-    val bcast = engine.spark.sparkContext.broadcast(withBlooms.map(_._3).toArray)
-    // deserialize ONCE per task (transient lazy — the heavyHitters pattern);
-    // the UDF returns the indices of filters that might contain the key hash
-    val probe = new Serializable {
-      @transient private lazy val filters =
-        bcast.value.map(TableStats.deserializeBloom)
-      def hits(h: Long): Array[Int] =
-        filters.indices.filter(i => filters(i).mightContainLong(h)).toArray
-    }
-    val hitUdf = org.apache.spark.sql.functions.udf((h: Long) => probe.hits(h))
-    import org.apache.spark.sql.functions.explode
-    val hitIdx = keyFrame
-      .select(TableStats.keyHashColumn(bloomOrder).as("_h"))
-      .select(explode(hitUdf(col("_h"))).as("_i"))
-      .distinct()
-      .collect().map(_.getInt(0)).toSet
-    val bloomPruned = withBlooms.zipWithIndex.collect {
-      case ((p, _, _), i) if !hitIdx.contains(i) => p
-    }.toSet
-    rangeSurvivors.filter { case (p, _) => !bloomPruned(p) }
-  }
-
   implicit final class MergeOps(private val engine: VersionedTables) extends AnyVal {
 
     /** MERGE `source` into the current version of `table` on `keyColumns`
       * and commit the result as one new version. See [[VersionedMerge]] for
-      * semantics and the scale contract.
+      * semantics and [[MergeApply]] for the scale contract.
       *
       * `source` must carry exactly the table's schema (the row that wins a
       * match IS the source row). `deleteWhen` is a predicate over source
       * columns marking delete rows. Duplicate keys in `source` would make
       * the match ambiguous (SQL MERGE raises); `requireDistinctSourceKeys`
       * pins that with one aggregation over the (small) source — opt out only
-      * when the producer already guarantees it. */
+      * when the producer already guarantees it. A key several current rows
+      * share makes each of them the source row, as SQL MERGE updates each. */
     def mergeInto(
         table: TableDefinition,
         source: DataFrame,
@@ -246,124 +61,14 @@ object VersionedMerge {
         deleteWhen: Option[Column] = None,
         clusterBy: Seq[String] = Nil,
         requireDistinctSourceKeys: Boolean = true): MergeResult = {
-      require(keyColumns.nonEmpty, "mergeInto needs at least one key column")
-      val missing = keyColumns.filterNot(source.columns.contains)
-      require(missing.isEmpty, s"key columns not in source: ${missing.mkString(", ")}")
       engine.requireCompatibleSchema(table, source)
-      if (requireDistinctSourceKeys) {
-        val dup = source.groupBy(keyColumns.map(col): _*).count()
-          .filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"duplicate source keys on (${keyColumns.mkString(", ")}): e.g. ${dup.head} — " +
-            "a key matched by two source rows is ambiguous (SQL MERGE raises here too)")
-      }
-
-      // pin EVERYTHING to one head snapshot (headState: O(partitions + tail),
-                                                                           // never a history replay); the commit CASes on it
-      val state = engine.tracker.headState(table.name)
-      val head = state.head
-      val snapshot = state.version
-
-      val keyFrame = source.select(keyColumns.map(col): _*).distinct()
-      // SQL MERGE's `WHEN MATCHED AND <pred> THEN DELETE` fires only when the
-      // predicate is TRUE; a NULL predicate falls through to UPDATE. A bare
-      // `not(d)` would silently DROP null-predicate rows (not(NULL) is NULL,
-      // filtered out) while their key still anti-joins the current row away —
-      // data loss, so pin the three-valued logic with coalesce.
-      val upserts = deleteWhen.map(d => source.filter(not(coalesce(d, lit(false)))))
-        .getOrElse(source)
-
-      val now = java.time.Instant.now()
-      snapshot match {
-        case SnapshotTableVersion(_) =>
-          // snapshot table = one unit of data: the rewrite is the whole table.
-          // A never-written table reads back with an EMPTY schema (emptyLike
-          // can infer nothing), so merge-as-first-write is a pure insert.
-          val current = engine.readVersion(table, snapshot)
-          val merged =
-            if (current.columns.isEmpty) upserts
-            else current.join(keyFrame, keyColumns, "left_anti").unionByName(upserts)
-          val version = Version.generate()
-          VersionedTables.writeDataVersioned(merged, table, version, clusterBy)
-          if (table.stats.nonEmpty)
-            TableStats.collectAndWrite(engine.spark, table, version, Nil, Some(merged.schema))
-          val versionDir = new org.apache.hadoop.fs.Path(
-            VersionPaths.pathFor(table.location, version))
-          val fs = versionDir.getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
-          require(fs.exists(versionDir),
-            s"merge into ${table.name} produced an empty table — a snapshot version " +
-              "must carry at least one row (deleting every row is a replace-all concern)")
-          val ops = VersionedTables.schemaOpsFor(table, state.schemaJson, snapshot, merged.schema,
-            definesWholeTable = true) :+ TableOperation.AddTableVersion(version)
-          val (tv, changes) = engine.versioned.commitIf(
-            table.name, TableUpdate(userId, message, now, ops), head)
-          MergeResult(tv, changes, Nil, Nil)
-
-        case PartitionedTableVersion(pvs) =>
-          // Discovery pass: which CURRENT partitions hold a matched key?
-          // First prune to candidates that CAN hold one (key⊇partition value
-          // intersection / stats ranges / manifest Blooms — see the scale
-          // contract above), then ONE semi-join of only that slice against
-          // the distinct source keys, then a distinct over the partition
-          // columns — bounded by the candidate count.
-          val candidates = VersionedMerge.candidatePartitions(
-            engine, table, pvs, keyFrame, keyColumns)
-          val matchedParts: Set[Partition] =
-            if (candidates.isEmpty) Set.empty
-            else VersionedTables.partitionValues(
-              engine.readVersion(table, PartitionedTableVersion(candidates))
-                .join(keyFrame, keyColumns, "left_semi"),
-              table.partitionSchema).toSet
-          val insertParts = VersionedTables.partitionValues(upserts, table.partitionSchema).toSet
-          val touched = matchedParts ++ insertParts
-          if (touched.isEmpty)
-            return MergeResult(snapshot, TableChanges.empty, Nil, Nil)
-
-          // Rewrite pass over ONLY the touched slice of the pinned snapshot.
-          // No touched slice (first write into a fresh table, or inserts
-          // landing only in brand-new partitions) means nothing to anti-join:
-          // the merge is a pure insert — and readVersion on an empty
-          // partition map would yield an empty-SCHEMA frame whose select
-          // cannot resolve anything, so the guard is load-bearing.
-          val touchedPvs = pvs.filter { case (p, _) => touched(p) }
-          // single-evaluation write: final-partition discovery is observed
-          // DURING the write job (writeDataVersionedObserved), so the
-          // touched-slice read + anti-join runs ONCE with no persist — the
-          // former shape materialized the merged frame (MEMORY_AND_DISK)
-          // purely to bridge a partitionValues action and the write. The
-          // once-only law lives in VersionedMergeSpec (file-scan count).
-          val merged =
-            if (touchedPvs.isEmpty) upserts
-            else engine.readVersion(table, PartitionedTableVersion(touchedPvs))
-              .select(source.columns.map(col): _*) // align column order for unionByName
-              .join(keyFrame, keyColumns, "left_anti")
-              .unionByName(upserts)
-          val version = Version.generate()
-          val finalParts = VersionedTables.writeDataVersionedObserved(
-            merged, table, version, clusterBy)
-          if (finalParts.nonEmpty) {
-            // the merge is a first-class write: its version carries a stats
-            // manifest like any insert, so later reads and merges keep
-            // pruning after the partition was rewritten
-            if (table.stats.nonEmpty)
-              TableStats.collectAndWrite(engine.spark, table, version, finalParts,
-                Some(merged.schema))
-          }
-          // a touched partition with no surviving rows is REMOVED from the
-          // visible table (its old data stays on disk for time travel)
-          val emptied = (touched -- finalParts.toSet).toList.sortBy(_.toPath)
-            .filter(pvs.contains) // an emptied partition that never existed needs no op
-          val ops = finalParts.sortBy(_.toPath).map(TableOperation.AddPartitionVersion(_, version)) ++
-            emptied.map(TableOperation.RemovePartition(_))
-          if (ops.isEmpty)
-            return MergeResult(snapshot, TableChanges.empty, Nil, Nil)
-          // merge-as-first-write defines the schema; steady-state merges
-          // record nothing (shape unchanged)
-          val schemaOps = VersionedTables.schemaOpsFor(table, state.schemaJson, snapshot, merged.schema, definesWholeTable = false)
-          val (tv, changes) = engine.versioned.commitIf(
-            table.name, TableUpdate(userId, message, now, schemaOps ++ ops), head)
-          MergeResult(tv, changes, finalParts, emptied)
-      }
+      import MergeApply._
+      val whole = source.columns.map(c => c -> MergeApply.sourceRef(c)).toMap
+      val delete = deleteWhen.map(MergeApply.qualifySource(_, source.columns.toSeq))
+      engine.mergeApply(table, source, keyColumns, userId, message,
+        matched = delete.map(d => MatchedDelete(Some(d))).toSeq :+ MatchedUpdate(None, whole),
+        notMatched = Seq(NotMatchedInsert(delete.map(d => not(coalesce(d, lit(false)))), whole)),
+        clusterBy = clusterBy, requireDistinctSourceKeys = requireDistinctSourceKeys)
     }
   }
 }

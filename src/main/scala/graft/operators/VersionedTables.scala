@@ -1103,14 +1103,19 @@ object VersionedTables {
     if (schema.isSnapshot) Nil
     else {
       val cols = schema.columnNames
-      ds.toDF().selectExpr(cols: _*).distinct().collect().toList.map { row =>
-        Partition(cols.zipWithIndex.map { case (c, i) =>
-          val v = Option(row.get(i)).map(_.toString).filter(_.nonEmpty)
-          ColumnValue(PartitionColumn(c), v.getOrElse(PathCodec.DefaultPartitionName))
-        })
-      }.distinct // null and "" collapse into the same default-partition dir
+      ds.toDF().selectExpr(cols: _*).distinct().collect().toList
+        .map(partitionOf(_, cols))
+        .distinct // null and "" collapse into the same default-partition dir
     }
   }
+
+  /** The partition the first `cols.size` fields of `row` name, under
+    * [[partitionValues]]' null/empty-string rule. */
+  private[operators] def partitionOf(row: Row, cols: Seq[String]): Partition =
+    Partition(cols.zipWithIndex.map { case (c, i) =>
+      val v = Option(row.get(i)).map(_.toString).filter(_.nonEmpty)
+      ColumnValue(PartitionColumn(c), v.getOrElse(PathCodec.DefaultPartitionName))
+    }.toList)
 
   /**
    * A staged (written but UNCOMMITTED) insert: the data files exist under

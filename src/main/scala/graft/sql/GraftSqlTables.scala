@@ -563,31 +563,17 @@ final case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPla
     }
   }
 
-  /** Map a resolved `MERGE INTO` onto the engine's two merge operators.
-    *
-    * The KEYED fast path ([[graft.operators.VersionedMerge]] — anti-join +
-    * union, no wide join) takes the source-row-replacement shapes:
-    * `WHEN MATCHED THEN UPDATE SET *` (+ optional source-predicate
-    * `WHEN MATCHED AND p THEN DELETE`) with an unconditional
-    * `WHEN NOT MATCHED THEN INSERT *`, or a bare
-    * `WHEN MATCHED THEN DELETE`.
-    *
-    * EVERY other clause combination — partial-column updates, conditions
-    * referencing the target row, conditional/sparse inserts, delete+insert,
-    * update-without-insert, `WHEN NOT MATCHED BY SOURCE` — routes through
-    * the GENERAL clause merge ([[graft.operators.MergeApply]]), which
-    * implements SQL's ordered first-TRUE-wins dispatch exactly.
-    *
-    * `WITH SCHEMA EVOLUTION` routes through the general path with
-    * `evolveSchema = true` (the target is substituted extended by typed
-    * NULLs for the missing source columns, so the evolution assignments
-    * resolve — see [[substituteDmlTarget]]).
-    *
-    * What still refuses (for both paths): a non-equi `ON` (the merge keys
-    * ARE the `t.k = s.k` conjunction — discovery pruning and the rewrite
-    * slice depend on it), subqueries or nondeterministic expressions
-    * inside clauses, and SET on partition columns in by-source clauses
-    * (matched-clause partition SETs MOVE rows). */
+  /** Map a resolved `MERGE INTO` onto the one merge engine,
+    * [[graft.operators.MergeApply]], which runs every clause combination
+    * with SQL's ordered first-TRUE-wins dispatch and picks its plan shape
+    * from the clauses. `WITH SCHEMA EVOLUTION` runs with `evolveSchema =
+    * true` (the target is substituted extended by typed NULLs for the
+    * missing source columns, so the evolution assignments resolve — see
+    * [[substituteDmlTarget]]). What refuses: a non-equi `ON` (the merge
+    * keys ARE the `t.k = s.k` conjunction — discovery pruning and the
+    * rewrite slice depend on it), subqueries or nondeterministic
+    * expressions inside clauses, and SET on partition columns in
+    * by-source clauses (matched-clause partition SETs MOVE rows). */
   private def convertMerge(
       m: MergeIntoTable, entry: GraftTableRegistry.Entry): LogicalPlan = {
     import graft.operators.MergeApply
@@ -615,42 +601,9 @@ final case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPla
       case other => unsupported(s"ON condition atom $other (need t.k = s.k equalities)")
     }.distinct
 
-    // a full SET * / INSERT *: ALL target columns assigned, each from the
-    // same-name source column. The size check is load-bearing: a PARTIAL
-    // same-name list (SET balance = s.balance) must NOT take the keyed
-    // whole-row-replacement path — unassigned columns keep target values,
-    // which only the general merge implements.
-    def isStarAssignments(assignments: Seq[Assignment]): Boolean =
-      assignments.size == targetOut.size && assignments.forall {
-        case Assignment(k: AttributeReference, v: AttributeReference) =>
-          targetOut.contains(k) && sourceOut.contains(v) && k.name.equalsIgnoreCase(v.name)
-        case _ => false
-      }
-
-    def sourceOnly(e: Expression): Boolean =
-      e.references.forall(sourceOut.contains) &&
-        !e.exists(_.isInstanceOf[SubqueryExpression]) && e.deterministic
-
-    // ---- the keyed fast path, when the statement IS a source-row replace
-    val keyed: Option[LogicalPlan] =
-      if (m.notMatchedBySourceActions.nonEmpty || m.withSchemaEvolution) None
-      else (m.matchedActions, m.notMatchedActions) match {
-        case (Seq(UpdateAction(None, as, _)), Seq(InsertAction(None, ins)))
-            if isStarAssignments(as) && isStarAssignments(ins) =>
-          Some(GraftMergeCommand(entry, keys, m.sourceTable, None))
-        case (Seq(DeleteAction(Some(c)), UpdateAction(None, as, _)), Seq(InsertAction(None, ins)))
-            if isStarAssignments(as) && isStarAssignments(ins) && sourceOnly(c) =>
-          Some(GraftMergeCommand(entry, keys, m.sourceTable, Some(byName(c))))
-        case (Seq(DeleteAction(None)), Seq()) =>
-          Some(GraftMergeCommand(entry, keys, m.sourceTable,
-            Some(org.apache.spark.sql.functions.lit(true))))
-        case _ => None
-      }
-    if (keyed.isDefined) return keyed.get
-
-    // ---- the general clause merge: re-express every clause by NAME
-    // (target columns plain, source columns `s.`-qualified), so the command
-    // re-resolves them against the execution-time read
+    // re-express every clause by NAME (target columns plain, source
+    // columns `s.`-qualified), so the command re-resolves them against the
+    // execution-time read
     def byNameTS(e: Expression): org.apache.spark.sql.Column = {
       require(!e.exists(_.isInstanceOf[SubqueryExpression]),
         "subqueries in MERGE clauses on graft tables are not supported — " +

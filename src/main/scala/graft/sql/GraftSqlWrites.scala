@@ -381,58 +381,13 @@ final case class GraftUpdateCommand(
       s"SET ${set.map(_._1).mkString(", ")}"
 }
 
-/** `MERGE INTO graft.s.t USING … ON … WHEN …` — the supported SQL shapes
-  * mapped onto [[graft.operators.VersionedMerge.MergeOps.mergeInto]] (see
-  * [[ResolveGraftTables.convertMerge]] for the shape matrix). The source
-  * plan rides as an inner child (EXPLAIN prints it, nothing runs); at run
-  * the source is aligned BY NAME to the target's schema and merged with
-  * the engine's pruned-discovery CAS-guarded commit. */
-final case class GraftMergeCommand(
-    entry: GraftTableRegistry.Entry,
-    keyColumns: Seq[String],
-    source: LogicalPlan,
-    deleteWhen: Option[Column]) extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[QueryPlan[_]] = Seq(source)
-
-  override def run(session: SparkSession): Seq[Row] = {
-    import graft.operators.VersionedMerge._
-    val user = UserId(session.conf.get(GraftSqlWrites.UserKey, session.sparkContext.sparkUser))
-    val engine = entry.engine
-    val table = entry.table
-    val src = GraftSqlBridge.ofRows(session, source)
-    val target: StructType = StructType(
-      engine.read(table).schema.filterNot(_.name == Version.VersionColumn).toArray)
-    val aligned =
-      if (target.isEmpty) src
-      else {
-        val cols: Seq[Column] = target.map { f =>
-          val c = src.columns.find(_.equalsIgnoreCase(f.name)).getOrElse(
-            throw new IllegalArgumentException(
-              s"MERGE source is missing column '${f.name}' of " +
-                s"${table.name.fullyQualifiedName} (source: ${src.columns.mkString(", ")})"))
-          val from = src.schema(c).dataType
-          (if (from == f.dataType) col(s"`$c`") else col(s"`$c`").cast(f.dataType)).as(f.name)
-        }
-        src.select(cols: _*)
-      }
-    engine.mergeInto(table, aligned, keyColumns, user,
-      s"SQL MERGE INTO ${table.name.fullyQualifiedName}", deleteWhen = deleteWhen)
-    Seq.empty
-  }
-
-  override def simpleString(maxFields: Int): String =
-    s"GraftMergeCommand ${entry.table.name.fullyQualifiedName} " +
-      s"ON ${keyColumns.mkString(", ")}" +
-      (if (deleteWhen.isDefined) " (with delete clause)" else "")
-}
-
-/** The general `MERGE INTO graft.s.t` — every clause combination the keyed
-  * fast path cannot express (partial-column updates, target-referencing
-  * conditions, conditional/sparse inserts, NOT MATCHED BY SOURCE), routed
-  * through [[graft.operators.MergeApply]]. Clause expressions arrive
-  * re-expressed by NAME (target plain, source `s.`-qualified), so the
-  * statement always acts on the execution-time head. */
+/** `MERGE INTO graft.s.t USING … ON … WHEN …` — every clause combination,
+  * run by [[graft.operators.MergeApply]], the one merge engine (see
+  * [[ResolveGraftTables.convertMerge]] for what refuses). Clause
+  * expressions arrive re-expressed by NAME (target plain, source
+  * `s.`-qualified), so the statement always acts on the execution-time
+  * head. The source plan rides as an inner child (EXPLAIN prints it,
+  * nothing runs at analysis). */
 final case class GraftMergeApplyCommand(
     entry: GraftTableRegistry.Entry,
     keyColumns: Seq[String],

@@ -297,4 +297,31 @@ class ChangeFeedSpec extends AnyFlatSpec with Matchers {
       engine.readRowChangesBetween(table, Seq("id"), c0, c1,
         requireDistinctKeys = false).collect()
   }
+
+  it should "raise on a full collect whichever slice holds the duplicate, in both output shapes" in {
+    val (engine, dir) = newEngine()
+    val table = TableDefinition(TableName("cdf", "dups_full"),
+      new File(dir, "dups_full").toURI, PartitionSchema("region"), FileFormat.Parquet)
+    engine.initTable(table, UserId("t"), "init")
+    // many unique keys around ONE duplicated key: the guard is per key
+    // group, so a full collect must reach and refuse that one group
+    val unique = (1 to 40).map(i => Account(s"u$i", "eu", i.toLong))
+    (unique :+ Account("u7", "eu", 70)).toDS()
+      .versionedInsertInto(engine, table, UserId("t"), "dup in old")
+    val c0 = engine.headCommit(table.name)
+    unique.map(a => a.copy(balance = a.balance + 1)).toDS()
+      .versionedReplaceAll(engine, table, UserId("t"), "unique new")
+    val c1 = engine.headCommit(table.name)
+    (unique :+ Account("u9", "eu", 90)).toDS()
+      .versionedReplaceAll(engine, table, UserId("t"), "dup in new")
+    val c2 = engine.headCommit(table.name)
+    for ((from, to) <- Seq(c0 -> c1, c1 -> c2); pre <- Seq(false, true)) {
+      withClue(s"$from -> $to, updatePreimages = $pre: ") {
+        val ex = the[Exception] thrownBy
+          engine.readRowChangesBetween(table, Seq("id"), from, to,
+            updatePreimages = pre).collect()
+        ex.getMessage should include("duplicate keys")
+      }
+    }
+  }
 }

@@ -179,4 +179,98 @@ class MergeApplyPropSpec extends AnyFlatSpec with Matchers {
       }
     }
   }
+
+  it should "match a driver-side reference on 12 random whole-row replace clause sets" in {
+    // SET-all (key column optionally left out) + INSERT-all, with an
+    // optional source-only DELETE (three-valued: NULL on every 4th key)
+    // whose INSERT is conditioned on its canonical negation, on a plain
+    // NOT, or not at all; unmatched delete rows, new partitions and
+    // partition moves (the key is k alone, day comes from the source).
+    // Even scenarios repeat some target keys, in one partition or across
+    // two: SQL MERGE makes each such row the source row, so the statement
+    // must leave the replace shape for the general plan.
+    val rnd = new scala.util.Random(2727)
+    case class W(k: Long, v: Option[Double], day: String, flag: String)
+    type DCond = W => Option[Boolean]
+    val deleteConds: Seq[(Column, DCond)] = Seq(
+      (col("s.flag") === "del", w => Some(w.flag == "del")),
+      (when(col("s.k") % 4 === 0, lit(null).cast("boolean")).otherwise(col("s.flag") === "del"),
+        w => if (w.k % 4 == 0) None else Some(w.flag == "del")))
+    for (scenario <- 1 to 12) {
+      val unique: Seq[T] = (0L until 30L).map { k =>
+        T(k, if (k % 5 == 0) None else Some(rnd.nextInt(40).toDouble),
+          Seq("d1", "d2", "d3")(rnd.nextInt(3)))
+      }
+      val target: Seq[T] =
+        if (scenario % 2 == 1) unique
+        else unique ++ rnd.shuffle(unique.toList).take(4).map(t =>
+          t.copy(v = Some(rnd.nextInt(40).toDouble), day = Seq("d1", "d2", "d3")(rnd.nextInt(3))))
+      val source: Seq[W] = rnd.shuffle((0L until 40L).toList).take(14).map { k =>
+        W(k, if (k % 7 == 0) None else Some(rnd.nextInt(30).toDouble),
+          Seq("d1", "d2", "d3", "d4")(rnd.nextInt(4)), Seq("up", "del")(rnd.nextInt(2)))
+      }
+      val delete = if (rnd.nextBoolean()) Some(deleteConds(rnd.nextInt(deleteConds.size))) else None
+      // 0: NOT coalesce(c, false) · 1: NOT c · 2: no condition
+      val insertForm = if (delete.isEmpty) 2 else rnd.nextInt(3)
+      val setKey = rnd.nextBoolean()
+      val qualifyInsert = rnd.nextBoolean()
+
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-mergeprop-row-")
+      val engine = VersionedTables.withFileStore(spark, dir.resolve("store").toUri)
+      val table = TableDefinition(TableName("prop", s"w${seq.incrementAndGet()}"),
+        dir.resolve("t").toUri, PartitionSchema("day"), FileFormat.Parquet)
+      engine.initTable(table, UserId("p"), "init")
+      import graft.operators.VersionedTables._
+      target.map(t => (t.k, t.v, t.day)).toDF("k", "v", "day").repartition(2)
+        .versionedInsertInto(engine, table, UserId("p"), "load")
+      val sourceDf = source.map(w => (w.k, w.v, w.day, w.flag))
+        .toDF("k", "v", "day", "flag").localCheckpoint()
+
+      val set = Map("v" -> col("s.v"), "day" -> col("s.day")) ++
+        (if (setKey) Map("k" -> col("s.k")) else Map.empty[String, Column])
+      val values = Seq("k", "v", "day").map(c => c -> col(if (qualifyInsert) s"s.$c" else c)).toMap
+      val insertCond = delete.map(_._1).flatMap { c =>
+        insertForm match {
+          case 0 => Some(!coalesce(c, lit(false)))
+          case 1 => Some(!c)
+          case _ => None
+        }
+      }
+      engine.mergeApply(table, sourceDf, Seq("k"), UserId("p"), s"row $scenario",
+        matched = delete.map(d => MatchedDelete(Some(d._1))).toSeq :+ MatchedUpdate(None, set),
+        notMatched = Seq(NotMatchedInsert(insertCond, values)))
+
+      // ---- reference evaluation
+      val byK = source.map(w => w.k -> w).toMap
+      val deletes = (w: W) => delete.exists(_._2(w).contains(true))
+      val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double], String)]
+      target.foreach { t =>
+        byK.get(t.k) match {
+          case Some(w) => if (!deletes(w)) kept += ((w.k, w.v, w.day))
+          case None    => kept += ((t.k, t.v, t.day))
+        }
+      }
+      val targetKeys = target.map(_.k).toSet
+      source.filterNot(w => targetKeys(w.k)).foreach { w =>
+        val inserts = insertForm match {
+          case 0 => !deletes(w)
+          case 1 => delete.exists(_._2(w).contains(false))
+          case _ => true
+        }
+        if (inserts) kept += ((w.k, w.v, w.day))
+      }
+
+      val cur = engine.read(table)
+      val got =
+        if (cur.columns.isEmpty) Array.empty[(Long, Option[Double], String)]
+        else cur.select("k", "v", "day").collect()
+          .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+            r.getString(2))).sortBy(x => (x._1, x._3, x._2.getOrElse(Double.NaN)))
+      val expected = kept.toArray.sortBy(x => (x._1, x._3, x._2.getOrElse(Double.NaN)))
+      withClue(s"scenario $scenario (delete=${delete.isDefined}, insertForm=$insertForm, " +
+          s"setKey=$setKey): ") {
+        got shouldBe expected
+      }
+    }
+  }
 }

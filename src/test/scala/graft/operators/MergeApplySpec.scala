@@ -212,6 +212,47 @@ class MergeApplySpec extends AnyFlatSpec with Matchers {
     b shouldBe a
   }
 
+  it should "take the whole-row replace shape exactly when a matched row becomes its source row" in {
+    import org.apache.spark.sql.types._
+    val target = StructType(Seq(StructField("id", LongType), StructField("day", StringType),
+      StructField("v", DoubleType)))
+    val cols = target.fieldNames.toSeq
+    def shape(matched: Seq[MatchedAction], notMatched: Seq[NotMatchedInsert],
+        schema: StructType = target, keys: Seq[String] = Seq("day", "id")) =
+      MergeApply.replaceShape(schema, schema, keys, matched, notMatched, cols.toSet)
+    val setAll = MatchedUpdate(None, cols.map(c => c -> col(s"s.$c")).toMap)
+    val setValue = MatchedUpdate(None, Map("v" -> col("s.v")))
+    val insertAll = NotMatchedInsert(None, cols.map(c => c -> col(c)).toMap)
+    val del = MatchedDelete(Some(col("s.v") < 0))
+    val insertUnlessDeleted = insertAll.copy(condition = Some(!coalesce(col("v") < 0, lit(false))))
+
+    shape(Seq(setAll), Seq(insertAll)) shouldBe Some(None)
+    // every non-key column SET from the source: keys are identical on a match
+    shape(Seq(setValue), Seq(insertAll)) shouldBe Some(None)
+    shape(Seq(del, setAll), Seq(insertUnlessDeleted)).map(_.isDefined) shouldBe Some(true)
+    // an unconditioned INSERT after a DELETE inserts unmatched delete rows:
+    // a different statement, so the general shape runs it
+    shape(Seq(del, setAll), Seq(insertAll)) shouldBe None
+    shape(Seq(del, setAll), Seq(insertAll.copy(condition = Some(!(col("v") < 0))))) shouldBe None
+    // a DELETE condition reading the target row
+    shape(Seq(MatchedDelete(Some(col("v") < 0)), setAll), Seq(insertUnlessDeleted)) shouldBe None
+    // a partial SET keeps the target's other columns
+    shape(Seq(MatchedUpdate(None, Map("id" -> col("s.id"), "day" -> col("s.day")))),
+      Seq(insertAll)) shouldBe None
+    shape(Seq(setAll.copy(condition = Some(col("s.v") > 0))), Seq(insertAll)) shouldBe None
+    shape(Seq(MatchedUpdate(None, Map("v" -> (col("s.v") + 1), "id" -> col("s.id"),
+      "day" -> col("s.day")))), Seq(insertAll)) shouldBe None
+    shape(Seq(setAll), Seq(NotMatchedInsert(None, Map("id" -> col("id"), "day" -> col("day"))))) shouldBe None
+    shape(Seq(setAll), Nil) shouldBe None
+    // a key left out of the SET whose equality does not mean identity
+    shape(Seq(MatchedUpdate(None, Map("id" -> col("s.id"), "day" -> col("s.day")))),
+      Seq(insertAll), keys = Seq("day", "v")) shouldBe None // -0.0 = 0.0
+    val lcase = StructType(Seq(StructField("id", LongType),
+      StructField("day", DataType.fromDDL("STRING COLLATE UTF8_LCASE")), StructField("v", DoubleType)))
+    shape(Seq(setValue), Seq(insertAll), schema = lcase) shouldBe None
+    shape(Seq(setAll), Seq(insertAll), schema = lcase) shouldBe Some(None)
+  }
+
   it should "commit nothing when no clause changes any row" in {
     val (engine, table) = fixture()
     val log0 = engine.log(table.name).size

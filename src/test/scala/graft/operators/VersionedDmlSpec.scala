@@ -205,6 +205,121 @@ class VersionedDmlSpec extends AnyFlatSpec with Matchers {
       s"SQL MERGE INTO ${table.name.fullyQualifiedName}"
   }
 
+  it should "insert an unmatched source row whose DELETE condition is TRUE (the INSERT has no condition)" in {
+    val (engine, table, t, _) = mergeFixture()
+    val n2 = seq.incrementAndGet()
+    // a6 matches no target row and carries balance < 0: the DELETE clause
+    // only acts on MATCHED rows, so the unconditioned INSERT takes it
+    Seq(("a1", "eu", 11L), ("a3", "us", -1L), ("a6", "eu", -5L))
+      .toDF("id", "region", "balance").createOrReplaceTempView(s"merge_marker_$n2")
+    spark.sql(
+      s"""MERGE INTO $t AS tgt USING merge_marker_$n2 AS s ON tgt.id = s.id
+         |WHEN MATCHED AND s.balance < 0 THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    def balances = engine.read(table).select("id", "balance")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    balances shouldBe Map("a1" -> 11L, "a2" -> 20L, "a4" -> 40L, "a6" -> -5L) // a3 deleted
+    // the mergeInto convention, spelled as SQL: the INSERT is conditioned
+    // on the negated DELETE condition, so an unmatched delete row is dropped
+    Seq(("a2", "eu", -1L), ("a7", "eu", -7L), ("a8", "ap", 8L))
+      .toDF("id", "region", "balance").createOrReplaceTempView(s"merge_marker_$n2")
+    spark.sql(
+      s"""MERGE INTO $t AS tgt USING merge_marker_$n2 AS s ON tgt.id = s.id
+         |WHEN MATCHED AND s.balance < 0 THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED AND NOT coalesce(s.balance < 0, false) THEN INSERT *""".stripMargin)
+    balances shouldBe Map("a1" -> 11L, "a4" -> 40L, "a6" -> -5L, "a8" -> 8L)
+  }
+
+  it should "file-scan the table at most twice for a SET-every-non-key-column + INSERT * merge, with no cache bridge" in {
+    val (engine, table, t, _) = mergeFixture()
+    val n2 = seq.incrementAndGet()
+    Seq(("a1", "eu", 11L), ("a9", "eu", 90L)).toDF("id", "region", "balance")
+      .createOrReplaceTempView(s"merge_bench_$n2")
+    // the table's temp dir name is unique to this fixture
+    val marker = new File(table.location).getParentFile.getName
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.sql(
+        s"""MERGE INTO $t AS tgt USING merge_bench_$n2 AS s
+           |ON tgt.id = s.id AND tgt.region = s.region
+           |WHEN MATCHED THEN UPDATE SET balance = s.balance
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      // listener delivery is async — poll for the write-command plan
+      val deadline = System.nanoTime() + 15L * 1000000000L
+      var writePlan: Option[String] = None
+      while (writePlan.isEmpty && System.nanoTime() < deadline) {
+        writePlan = plans.toArray(Array.empty[String])
+          .find(p => p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(marker))
+        if (writePlan.isEmpty) Thread.sleep(100)
+      }
+      withClue(s"captured ${plans.size} plans: ") { writePlan should not be empty }
+      Thread.sleep(500) // let any trailing listener events drain
+      val all = plans.toArray(Array.empty[String])
+      val tableScans = all.count(p =>
+        p.linesIterator.exists(l => l.contains("FileScan parquet") && l.contains(marker)))
+      withClue(s"actions file-scanning the table (want <= 2: discovery + fused write):\n" +
+          all.filter(_.contains(marker)).mkString("\n---\n")) {
+        tableScans should be <= 2
+      }
+      withClue(writePlan.get) { writePlan.get should not include "InMemoryTableScan" }
+    } finally spark.listenerManager.unregister(listener)
+    engine.read(table).select("id", "region", "balance")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet shouldBe
+      Set(("a1", "eu", 11L), ("a2", "eu", 20L), ("a9", "eu", 90L), ("a3", "us", 30L), ("a4", "ap", 40L))
+  }
+
+  it should "update every target row a key matches when several share it, whatever the clause spelling" in {
+    // a1 twice in one partition, a3 once in each of two; merged on id alone
+    def dupTable(): (VersionedTables, TableDefinition, String) = {
+      val dir = Files.createTempDirectory("graft-sqlmerge-dup-").toFile
+      val n = seq.incrementAndGet()
+      val engine = VersionedTables.withFileStore(spark, new File(dir, "store").toURI)
+      val table = TableDefinition(TableName("dml", s"dupkeys_$n"),
+        new File(dir, "accounts").toURI, PartitionSchema("region"), FileFormat.Parquet)
+      engine.initTable(table, UserId("t"), "init")
+      GraftTableRegistry.register(engine, table)
+      Seq(("a1", "eu", 10L), ("a1", "eu", 15L), ("a2", "eu", 20L), ("a3", "us", 30L),
+        ("a3", "ap", 31L), ("a4", "ap", 40L))
+        .toDF("id", "region", "balance")
+        .versionedInsertInto(engine, table, UserId("t"), "base")
+      (engine, table, s"graft.${table.name.fullyQualifiedName}")
+    }
+    val n2 = seq.incrementAndGet()
+    Seq(("a1", "eu", 11L), ("a3", "us", 33L), ("a5", "eu", 50L))
+      .toDF("id", "region", "balance").createOrReplaceTempView(s"merge_dup_$n2")
+    // SET every non-key column (the replace shape's clauses), SET *, and a
+    // conditioned UPDATE that only the general plan runs
+    val updates = Seq(
+      "WHEN MATCHED THEN UPDATE SET region = s.region, balance = s.balance",
+      "WHEN MATCHED THEN UPDATE SET *",
+      "WHEN MATCHED AND 1 = 1 THEN UPDATE SET region = s.region, balance = s.balance")
+    val results = updates.map { update =>
+      val (engine, table, t) = dupTable()
+      spark.sql(
+        s"""MERGE INTO $t AS tgt USING merge_dup_$n2 AS s ON tgt.id = s.id
+           |$update
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      engine.read(table).select("id", "region", "balance").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    }
+    val expected = Seq(("a1", "eu", 11L), ("a1", "eu", 11L), ("a2", "eu", 20L),
+      ("a3", "us", 33L), ("a3", "us", 33L), ("a4", "ap", 40L), ("a5", "eu", 50L))
+    updates.zip(results).foreach { case (update, got) =>
+      withClue(update) { got shouldBe expected }
+    }
+  }
+
   it should "run a delete-only merge (matched keys removed, unmatched no-ops)" in {
     val (engine, table, t, src) = mergeFixture()
     spark.sql(s"MERGE INTO $t AS tgt USING $src AS s ON tgt.id = s.id WHEN MATCHED THEN DELETE")

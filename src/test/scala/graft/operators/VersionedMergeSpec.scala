@@ -150,6 +150,24 @@ class VersionedMergeSpec extends AnyFlatSpec with Matchers {
       engine.mergeInto(table, dup, Seq("id"), UserId("t"), "dup")
   }
 
+  it should "make every current row a key matches the source row when several rows share the key" in {
+    val (engine, dir) = newEngine()
+    val table = TableDefinition(TableName("test", "acc_dupkeys"),
+      new File(dir, "acc_dupkeys").toURI, PartitionSchema("region"), FileFormat.Parquet)
+    engine.initTable(table, UserId("t"), "init")
+    // a1 twice in one partition, a3 once in each of two partitions
+    Seq(Account("a1", "eu", 10), Account("a1", "eu", 15), Account("a2", "eu", 20),
+      Account("a3", "us", 30), Account("a3", "ap", 31), Account("a4", "ap", 40))
+      .toDS().versionedInsertInto(engine, table, UserId("t"), "base")
+    val source = Seq(Account("a1", "eu", 11), Account("a3", "us", 33),
+      Account("a4", "ap", -1), Account("a5", "eu", 50)).toDS().toDF()
+    engine.mergeInto(table, source, Seq("id"), UserId("t"), "dup target keys",
+      deleteWhen = Some(col("balance") < 0))
+    engine.read(table).as[Account].collect().toSeq should contain theSameElementsAs Seq(
+      Account("a1", "eu", 11), Account("a1", "eu", 11), Account("a2", "eu", 20),
+      Account("a3", "us", 33), Account("a3", "us", 33), Account("a5", "eu", 50))
+  }
+
   // ------------------------------------------------------------------
   // discovery pruning: the laws pin "files of partitions that cannot hold
   // a matched key are NEVER OPENED" by corrupting those partitions' data
@@ -339,6 +357,20 @@ class VersionedMergeSpec extends AnyFlatSpec with Matchers {
     engine.mergeInto(table, Seq(User("u1", "A", "a@m")).toDS().toDF(),
       Seq("id"), UserId("t"), "bootstrap merge")
     engine.read(table).as[User].collect() shouldBe Array(User("u1", "A", "a@m"))
+  }
+
+  it should "make every current row a key matches the source row on a snapshot table" in {
+    val (engine, dir) = newEngine()
+    val table = TableDefinition(TableName("test", "snap_dupkeys"),
+      new File(dir, "snap_dupkeys").toURI, PartitionSchema.snapshot, FileFormat.Parquet)
+    engine.initTable(table, UserId("t"), "init")
+    Seq(User("u1", "A", "a@m"), User("u1", "A2", "a2@m"), User("u2", "B", "b@m"))
+      .toDS().versionedInsertInto(engine, table, UserId("t"), "base")
+    engine.mergeInto(table, Seq(User("u1", "N", "n@m"), User("u3", "C", "c@m")).toDS().toDF(),
+      Seq("id"), UserId("t"), "dup target keys")
+    engine.read(table).as[User].collect().toSeq should contain theSameElementsAs Seq(
+      User("u1", "N", "n@m"), User("u1", "N", "n@m"), User("u2", "B", "b@m"),
+      User("u3", "C", "c@m"))
   }
 
   it should "refuse a merge that would empty a snapshot table" in {
