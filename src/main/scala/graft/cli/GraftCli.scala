@@ -792,12 +792,19 @@ object GraftCli {
             val cols = flags.get("columns").toSeq
               .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
             val engine = new graft.operators.VersionedTables(cliSpark(), tracker)
-            val version = flags.get("at") match {
-              case Some(commit) => engine.versionAt(t, graft.core.CommitId(commit))
-              case None         => tracker.currentVersion(t)
+            // the pinned state and the schema the log recorded at it
+            val (version, recorded) = flags.get("at") match {
+              case Some(commit) =>
+                val st = tracker.tableState(t)
+                val id = graft.core.CommitId(commit)
+                (st.versionAt(id), st.schemaJsonAt(id))
+              case None =>
+                val hs = tracker.headState(t)
+                (hs.version, hs.schemaJson)
             }
             val row = graft.operators.MetadataQuery.summarizeVersion(table = table,
-              engine = engine, version = version, columns = cols).head()
+              engine = engine, version = version, columns = cols,
+              schemaHint = graft.operators.VersionedTables.parseSchemaJson(recorded)).head()
             out.println(s"rows    ${row.getLong(0)}")
             cols.map(_.toLowerCase).zipWithIndex.foreach { case (c, i) =>
               val base = 1 + i * 3

@@ -49,10 +49,7 @@ object TextIndexProbe {
     val terms = Seq("the", "data", "model")
     // live-version file count (pre-compaction versions stay on disk for time
     // travel, so a raw directory walk overcounts)
-    def files(): Long = {
-      val pinned = engine.versionAt(table.name, engine.tracker.currentRef(table.name))
-      engine.readVersion(table, pinned).inputFiles.length.toLong
-    }
+    def files(): Long = engine.read(table).inputFiles.length.toLong
     def timeSearch(reps: Int): Double = {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

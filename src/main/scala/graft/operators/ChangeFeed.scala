@@ -87,8 +87,9 @@ object ChangeFeed {
           val mixedAdopted = (aKept.valuesIterator ++ bKept.valuesIterator)
             .contains(Version.Unversioned)
           if (mixedAdopted) {
-            val oldAll = engine.readVersion(table, PartitionedTableVersion(aKept))
-            val newAll = engine.readVersion(table, PartitionedTableVersion(bKept))
+            // adopted data reads per partition and infers (no hint applies)
+            val oldAll = engine.readVersion(table, PartitionedTableVersion(aKept), None)
+            val newAll = engine.readVersion(table, PartitionedTableVersion(bKept), None)
             val partCols = table.partitionSchema.columnNames.map(_.toLowerCase).toSet
             // align partition-column types across the two reads (one side
             // may have taken the all-versioned fast path): strings on both
@@ -98,25 +99,28 @@ object ChangeFeed {
             return keyedDiff(stringPartCols(oldAll), stringPartCols(newAll),
               keyColumns, requireDistinctKeys, updatePreimages)
           }
+          // the slices below infer their schema: the endpoints resolve
+          // through the bounded versionAt, which carries no schema record
+          // (a tableState replay per delivered commit is what it avoids)
           val added = bKept.filter { case (p, _) => !aKept.contains(p) }
           val removed = aKept.filter { case (p, _) => !bKept.contains(p) }
           val repointedParts = aKept.keySet
             .filter(p => bKept.get(p).exists(v => !aKept.get(p).contains(v)))
           val inserts =
             if (added.isEmpty) None
-            else Some(engine.readVersion(table, PartitionedTableVersion(added))
+            else Some(engine.readVersion(table, PartitionedTableVersion(added), None)
               .withColumn(ChangeTypeColumn, lit("insert")))
           val deletes =
             if (removed.isEmpty) None
-            else Some(engine.readVersion(table, PartitionedTableVersion(removed))
+            else Some(engine.readVersion(table, PartitionedTableVersion(removed), None)
               .withColumn(ChangeTypeColumn, lit("delete")))
           val compared =
             if (repointedParts.isEmpty) None
             else {
               val oldSlice = engine.readVersion(table,
-                PartitionedTableVersion(aKept.filter(kv => repointedParts(kv._1))))
+                PartitionedTableVersion(aKept.filter(kv => repointedParts(kv._1))), None)
               val newSlice = engine.readVersion(table,
-                PartitionedTableVersion(bKept.filter(kv => repointedParts(kv._1))))
+                PartitionedTableVersion(bKept.filter(kv => repointedParts(kv._1))), None)
               Some(keyedDiff(oldSlice, newSlice, keyColumns, requireDistinctKeys,
                 updatePreimages))
             }
@@ -127,8 +131,9 @@ object ChangeFeed {
         case (SnapshotTableVersion(va), SnapshotTableVersion(vb)) =>
           if (va == vb) emptyFeed(engine, table)
           else {
-            val oldDf = engine.readVersion(table, SnapshotTableVersion(va))
-            val newDf = engine.readVersion(table, SnapshotTableVersion(vb))
+            // bounded endpoints carry no schema record (see above)
+            val oldDf = engine.readVersion(table, SnapshotTableVersion(va), None)
+            val newDf = engine.readVersion(table, SnapshotTableVersion(vb), None)
             // a never-written endpoint reads back with an empty schema —
             // treat it as the empty slice of the OTHER side's shape
             if (oldDf.columns.isEmpty)
@@ -177,7 +182,8 @@ object ChangeFeed {
   /** Zero-row feed with the table's columns + the change column (schema
     * recovered from disk like every empty read). */
   private def emptyFeed(engine: VersionedTables, table: TableDefinition): DataFrame =
-    engine.readVersion(table, PartitionedTableVersion(Map.empty))
+    // an empty state opens no committed file: its schema comes from disk
+    engine.readVersion(table, PartitionedTableVersion(Map.empty), None)
       .withColumn(ChangeTypeColumn, lit("insert")).limit(0)
 
   /** Keyed full-outer compare of two same-schema slices: new-only keys →

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.core._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, length, lit, raise_error, when}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, concat, count, length, lit,
+  raise_error, struct, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import java.net.URI
@@ -455,9 +456,11 @@ object DeleteVectors {
 
   /** The shared merge-on-read DML engine behind [[DvOps.deleteWhereDV]] and
     * [[DvOps.updateWhereDV]]: prune candidates, resolve bases (depth-1),
-    * scan the DV-applied live rows once, write the new DV (and for UPDATE
-    * the post-image data files) under one fresh marker version, commit with
-    * a CAS on the entry head. */
+    * scan the DV-applied live rows once, write the new DV to a temporary
+    * directory while observing the matches, run the bulk guard on those
+    * counts, then move the DV (and for UPDATE write the post-image data
+    * files) under one fresh marker version and commit with a CAS on the
+    * entry head. */
   private def runDvDml(
       engine: VersionedTables,
       table: TableDefinition,
@@ -482,6 +485,9 @@ object DeleteVectors {
     val state = engine.tracker.headState(table.name)
     val head = state.head
     val snapshot = state.version
+    // the schema the log recorded at the pinned head plans every scan below
+    // (no footer schema-inference job); histories without a record infer
+    val recorded = VersionedTables.parseSchemaJson(state.schemaJson)
     val pvs = snapshot match {
       case PartitionedTableVersion(m) => m
       case _ => throw new IllegalStateException(
@@ -538,7 +544,7 @@ object DeleteVectors {
         if (counted.forall(_.isDefined)) {
           val total = counted.flatten.sum
           if (total > 0) {
-            val estimate = engine.readVersion(table, PartitionedTableVersion(candidates))
+            val estimate = engine.readVersion(table, PartitionedTableVersion(candidates), recorded)
               .filter(coalesce(predicate, lit(false))).count()
             if (estimate > maxFraction * total)
               throw new IllegalArgumentException(
@@ -572,162 +578,165 @@ object DeleteVectors {
       VersionedTables.uriToLoadPath(VersionPaths.pathFor(p.resolvePath(table.location), b))
     }
     val rootPrefix = qualifiedRootPrefix(conf, table.location)
-    val raw = spark.read.format(table.format.name).options(table.options)
+    val reader = spark.read.format(table.format.name).options(table.options)
+    val raw = recorded.fold(reader)(h => reader.schema(VersionedTables.hintLoadSchema(table, h)))
       .option("basePath", VersionedTables.uriToLoadPath(table.location))
       .load(dataPaths: _*)
       .withColumn(FileCol, relativeToRoot(col("_metadata.file_path"), rootPrefix))
       .withColumn(PosCol, col("_metadata.row_index"))
 
-    // existing DV entries of the candidate markers: carried into the new
-    // DV (depth-1 rebase) AND — decisive for UPDATE — subtracted from the
-    // match scan, so a row an earlier DV deleted can never resurrect as a
-    // post-image. (For DELETE the subtraction is a no-op semantically:
-    // re-matched positions union back in unchanged.)
+    // existing DV entries of the candidate markers, normalized to
+    // root-relative on the way (migrate-on-rebase: a rebase of a legacy
+    // absolute-path DV writes the relative form forward). They are
+    // subtracted from the match scan — decisive for UPDATE: a row an
+    // earlier DV deleted can never resurrect as a post-image — and carried
+    // into the new DV of every partition this statement affects (depth-1
+    // rebase). The subtraction also makes new and carried entries
+    // disjoint, so their union needs no de-duplication.
     val oldMarkers = candidates.toSeq.collect {
       case (p, m) if Version.isDeleteMarker(m) => (p, m)
-    }
-    val oldDv =
-      if (oldMarkers.isEmpty) None
-      else Some(spark.read.schema(DvSchema)
-        .parquet(oldMarkers.map { case (p, m) =>
-          VersionedTables.uriToLoadPath(dvDir(table, p, m)) }: _*)
+    }.sortBy(_._1.toPath)
+    def dvEntries(markers: Seq[(Partition, Version)]): DataFrame =
+      spark.read.schema(DvSchema)
+        .parquet(markers.map { case (p, m) => VersionedTables.uriToLoadPath(dvDir(table, p, m)) }: _*)
         .select(normalizeDvPath(col("file_path"), rootPrefix).as("file_path"),
-          col("row_index")))
-    val live = oldDv.fold(raw)(dv =>
-      raw.join(gateBroadcast(spark, dv, markerDvBytes(conf, table, oldMarkers)),
-        raw(FileCol) === dv("file_path") && raw(PosCol) === dv("row_index"), "left_anti"))
+          col("row_index"))
+    val live =
+      if (oldMarkers.isEmpty) raw
+      else {
+        val dv = dvEntries(oldMarkers)
+        raw.join(gateBroadcast(spark, dv, markerDvBytes(conf, table, oldMarkers)),
+          raw(FileCol) === dv("file_path") && raw(PosCol) === dv("row_index"), "left_anti")
+      }
 
     val matchCond = coalesce(predicate, lit(false))
-    val matched = live.filter(matchCond)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // UPDATE reads the matched rows twice (DV entries, then post-images):
+    // persisted, so both come from ONE evaluation of the predicate
+    val matched =
+      if (set.isEmpty) live.filter(matchCond)
+      else live.filter(matchCond).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE aggregation yields the affected partitions AND the match count
-      // (separate distinct + count jobs each re-walked the cached rows —
-      // two Spark jobs where the per-statement write path needs one).
-      // Value→Partition conversion mirrors VersionedTables.partitionValues:
-      // null and "" collapse into the default-partition dir.
-      val partExprs = partCols.map(c => col(s"`$c`"))
-      val grouped = matched.groupBy(partExprs: _*)
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("__graft_dv_n")).collect()
-      val affected = grouped.map { row =>
-        Partition(partCols.zipWithIndex.map { case (c, i) =>
-          val v = Option(row.get(i)).map(_.toString).filter(_.nonEmpty)
-          ColumnValue(PartitionColumn(c), v.getOrElse(PathCodec.DefaultPartitionName))
-        })
-      }.distinct.filter(pvs.contains).sortBy(_.toPath).toList
-      if (affected.isEmpty) return DvDeleteResult(snapshot, TableChanges.empty, Nil, 0L)
-      val matchedRows = grouped.map(_.getLong(partCols.length)).sum
-      val affectedSet = affected.toSet
-
-      // bulk-match guard (before any byte is written): when the stats
-      // manifests know every AFFECTED partition's row count, refuse if the
-      // CUMULATIVE deletion vector — carried-forward old entries PLUS this
-      // statement's new matches — would exceed the configured fraction of
-      // those partitions' base rows. Counting the carried entries is what
-      // keeps repeated sub-threshold deletes honest: 40% then 40% of the
-      // remainder must trip the cap the second time, because the read tax
-      // the guard bounds is the WHOLE anti-join, not one increment. The DV
-      // this DML would build taxes every subsequent read; copy-on-write
-      // moves comparable bytes ONCE at that selectivity. Partitions without
-      // a manifest leave the total unknown and the guard silent (never a
-      // false refusal).
-      val maxFraction = spark.conf.get(MaxDeleteFractionKey, "0.5").toDouble
-      if (maxFraction < 1.0) {
-        val counted = affected.map { p =>
-          TableStats.readManifestCached(conf, table.location, bases(p).label)
-            .map(_.filesFor(p.toHivePath).map(_.rows).sum)
-        }
-        if (counted.forall(_.isDefined)) {
-          val total = counted.flatten.sum
-          // footer-count only, ON THE DRIVER (round 17): DV sidecars are a
-          // few small immutable files, so their exact row count comes from
-          // cached footer reads — the former spark.read.parquet(...).count()
-          // was a whole extra Spark job per guarded statement for the same
-          // footer-served number
-          val carried = candidates.toSeq.iterator.collect {
-            case (p, m) if Version.isDeleteMarker(m) && affectedSet(p) =>
-              dvRowCount(conf, table, p, m)
-          }.sum
-          if (total > 0 && matchedRows + carried > maxFraction * total)
-            throw new IllegalArgumentException(
-              f"$verb would leave a deletion vector of ${matchedRows + carried} " +
-                f"($matchedRows new + $carried carried) of ~$total base rows " +
-                f"(${(matchedRows + carried).toDouble / total}%.2f > " +
-                f"$MaxDeleteFractionKey=$maxFraction) in the affected partitions — " +
-                "a bulk merge-on-read DML builds a deletion vector every later " +
-                "read must anti-join; use the copy-on-write DML " +
-                "(deleteWhere/updateWhere, or spark.graft.delete.mode=cow), fold " +
-                "first (compact / SQL OPTIMIZE), or raise the fraction")
-        }
-      }
-
       val marker = Version.generateDeleteMarker()
 
-      // UPDATE: the post-images land as the marker version's own data
-      // files through the one shared versioned writer (assignments see the
-      // OLD row — staged into temp columns first so later SETs cannot read
-      // earlier SETs' results, exactly like the copy-on-write updateWhere)
-      set.foreach { assignments =>
-        val staged = assignments.zipWithIndex.foldLeft(matched: DataFrame) {
-          case (d, ((c, e), i)) => d.withColumn(s"_dv_set_$i", e)
-        }
-        val swapped = assignments.zipWithIndex.foldLeft(staged) {
-          case (d, ((c, _), i)) => d.withColumn(c, col(s"_dv_set_$i"))
-        }
-        val updated = assignments.zipWithIndex.foldLeft(swapped) {
-          case (d, (_, i)) => d.drop(s"_dv_set_$i")
-        }.drop(FileCol, PosCol)
-        // a SET that RETYPES a column would leave the marker's post-image
-        // files under a different schema than the base files of the SAME
-        // partition version — a mix no read contract covers. The
-        // copy-on-write updateWhere rewrites whole partitions and records
-        // the schema; this path refuses instead.
-        def shape(s: StructType) = s.fields.iterator
-          .map(f => (f.name.toLowerCase, f.dataType.catalogString)).toSet
-        val originalShape = shape(StructType(
-          matched.schema.filterNot(f => f.name == FileCol || f.name == PosCol).toArray))
-        require(shape(updated.schema) == originalShape,
-          s"updateWhereDV cannot RETYPE columns (post-image files would mix schemas " +
-            s"with the base files of the same version): got " +
-            s"${updated.schema.map(f => s"${f.name}:${f.dataType.catalogString}").mkString(", ")} " +
-            "— cast the SET expression back to the column's type, or use the " +
-            "copy-on-write updateWhere")
-        VersionedTables.writeDataVersioned(updated, table, marker)
-      }
-
-      // old DV entries of AFFECTED partitions ride into the new DV —
-      // normalized to root-relative on the way (migrate-on-rebase: a rebase
-      // of a legacy absolute-path DV writes the relative form forward)
-      val oldDvCarried: Seq[DataFrame] = candidates.toSeq.collect {
-        case (p, m) if Version.isDeleteMarker(m) && affectedSet(p) =>
-          val withCols = partCols.zipWithIndex.foldLeft(
-            spark.read.schema(DvSchema).parquet(
-              VersionedTables.uriToLoadPath(dvDir(table, p, m)))
-              .select(normalizeDvPath(col("file_path"), rootPrefix).as("file_path"),
-                col("row_index"))) { case (df, (c, i)) =>
+      // (1) ONE write puts the new DV entries — plus the carried entries of
+      // every stacked candidate — under `_tmp_dv_<marker>/<partition>`, and
+      // OBSERVES the new matches during it: their count and the partitions
+      // holding them, so match discovery costs no job of its own. Small
+      // inputs run as one task, larger ones shuffle by partition: either way
+      // each partition's DV is one file. Nothing is under a `_version=`
+      // directory yet.
+      val partExprs = partCols.map(c => col(s"`$c`"))
+      val obs = Observation(s"graft_dv_${marker.label}")
+      val newEntries = matched.select((partExprs :+
+          col(FileCol).as("file_path")) :+ col(PosCol).as("row_index"): _*)
+        .observe(obs, count(lit(1)).as("n"), collect_set(struct(partExprs: _*)).as("parts"))
+      val carried: Seq[DataFrame] = oldMarkers.map { case (p, m) =>
+        val withCols = partCols.zipWithIndex.foldLeft(dvEntries(Seq(p -> m))) {
+          case (df, (c, i)) =>
             val value = p.columnValues(i).value
             df.withColumn(c,
               if (value == PathCodec.DefaultPartitionName) lit(null).cast("string")
               else lit(value))
-          }
-          withCols.select((partCols.map(c => col(s"`$c`")) :+
-            col("file_path")) :+ col("row_index"): _*)
+        }
+        withCols.select((partExprs :+ col("file_path")) :+ col("row_index"): _*)
       }
-      val newEntries = matched.select((partCols.map(c => col(s"`$c`")) :+
-        col(FileCol).as("file_path")) :+ col(PosCol).as("row_index"): _*)
-      val allDv = oldDvCarried.foldLeft(newEntries)(_.unionByName(_))
-        .dropDuplicates("file_path", "row_index")
-
-      // one job writes every partition's DV files, then O(affected)
-      // renames slot them under their marker directories
+      val allDv = carried.foldLeft(newEntries)(_.unionByName(_))
       val tmp = new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(table.location), s"_tmp_dv_${marker.label}")
       val fs = tmp.getFileSystem(conf)
-      try {
-        allDv.repartition(partCols.map(c => col(s"`$c`")): _*)
-          .write.partitionBy(partCols: _*).mode("overwrite")
+      val (affected, matchedRows) = try {
+        val arranged =
+          if (VersionedTables.writesAsOneTask(allDv)) allDv.coalesce(1)
+          else allDv.repartition(partExprs: _*)
+        arranged.write.partitionBy(partCols: _*).mode("overwrite")
           .options(VersionedTables.NoSuccessMarker)
           .parquet(tmp.toString)
+        val metrics = obs.get
+        val matchedRows = metrics("n").asInstanceOf[Long]
+        // Value→Partition conversion mirrors VersionedTables.partitionValues:
+        // null and "" collapse into the default-partition dir
+        val affected = metrics("parts").asInstanceOf[scala.collection.Seq[Row]]
+          .map(VersionedTables.partitionOf(_, partCols))
+          .distinct.filter(pvs.contains).sortBy(_.toPath).toList
+        if (affected.isEmpty) return DvDeleteResult(snapshot, TableChanges.empty, Nil, 0L)
+        val affectedSet = affected.toSet
+
+        // (2) bulk-match guard, on the observed counts, before anything moves
+        // under a `_version=` directory (a refusal leaves only the temporary
+        // directory, removed below): when the stats manifests know every
+        // AFFECTED partition's row count, refuse if the CUMULATIVE deletion
+        // vector — carried-forward old entries PLUS this statement's new
+        // matches — would exceed the configured fraction of those
+        // partitions' base rows. Counting the carried entries is what keeps
+        // repeated sub-threshold deletes honest: 40% then 40% of the
+        // remainder must trip the cap the second time, because the read tax
+        // the guard bounds is the WHOLE anti-join, not one increment. The DV
+        // this DML would build taxes every subsequent read; copy-on-write
+        // moves comparable bytes ONCE at that selectivity. Partitions
+        // without a manifest leave the total unknown and the guard silent
+        // (never a false refusal).
+        val maxFraction = spark.conf.get(MaxDeleteFractionKey, "0.5").toDouble
+        if (maxFraction < 1.0) {
+          val counted = affected.map { p =>
+            TableStats.readManifestCached(conf, table.location, bases(p).label)
+              .map(_.filesFor(p.toHivePath).map(_.rows).sum)
+          }
+          if (counted.forall(_.isDefined)) {
+            val total = counted.flatten.sum
+            // footer-count only, ON THE DRIVER: DV sidecars are a few small
+            // immutable files, so their exact row count comes from cached
+            // footer reads, not a Spark job
+            val carriedRows = oldMarkers.iterator.collect {
+              case (p, m) if affectedSet(p) => dvRowCount(conf, table, p, m)
+            }.sum
+            if (total > 0 && matchedRows + carriedRows > maxFraction * total)
+              throw new IllegalArgumentException(
+                f"$verb would leave a deletion vector of ${matchedRows + carriedRows} " +
+                  f"($matchedRows new + $carriedRows carried) of ~$total base rows " +
+                  f"(${(matchedRows + carriedRows).toDouble / total}%.2f > " +
+                  f"$MaxDeleteFractionKey=$maxFraction) in the affected partitions — " +
+                  "a bulk merge-on-read DML builds a deletion vector every later " +
+                  "read must anti-join; use the copy-on-write DML " +
+                  "(deleteWhere/updateWhere, or spark.graft.delete.mode=cow), fold " +
+                  "first (compact / SQL OPTIMIZE), or raise the fraction")
+          }
+        }
+
+        // UPDATE: the post-images land as the marker version's own data
+        // files through the one shared versioned writer (assignments see the
+        // OLD row — staged into temp columns first so later SETs cannot read
+        // earlier SETs' results, exactly like the copy-on-write updateWhere)
+        val postImages = set.map { assignments =>
+          val staged = assignments.zipWithIndex.foldLeft(matched: DataFrame) {
+            case (d, ((_, e), i)) => d.withColumn(s"_dv_set_$i", e)
+          }
+          val swapped = assignments.zipWithIndex.foldLeft(staged) {
+            case (d, ((c, _), i)) => d.withColumn(c, col(s"_dv_set_$i"))
+          }
+          val updated = assignments.zipWithIndex.foldLeft(swapped) {
+            case (d, (_, i)) => d.drop(s"_dv_set_$i")
+          }.drop(FileCol, PosCol)
+          // a SET that RETYPES a column would leave the marker's post-image
+          // files under a different schema than the base files of the SAME
+          // partition version — a mix no read contract covers. The
+          // copy-on-write updateWhere rewrites whole partitions and records
+          // the schema; this path refuses instead.
+          def shape(s: StructType) = s.fields.iterator
+            .map(f => (f.name.toLowerCase, f.dataType.catalogString)).toSet
+          val originalShape = shape(StructType(
+            matched.schema.filterNot(f => f.name == FileCol || f.name == PosCol).toArray))
+          require(shape(updated.schema) == originalShape,
+            s"updateWhereDV cannot RETYPE columns (post-image files would mix schemas " +
+              s"with the base files of the same version): got " +
+              s"${updated.schema.map(f => s"${f.name}:${f.dataType.catalogString}").mkString(", ")} " +
+              "— cast the SET expression back to the column's type, or use the " +
+              "copy-on-write updateWhere")
+          updated
+        }
+
+        // (3) O(affected) renames slot the DV files under their marker
+        // directories; the carried entries of unaffected candidates stay in
+        // the temporary directory and go with it
         affected.foreach { p =>
           val src = new org.apache.hadoop.fs.Path(tmp, p.toHivePath)
           require(fs.exists(src), s"DV write produced no output for '${p.toPath}'")
@@ -736,6 +745,9 @@ object DeleteVectors {
           require(fs.rename(src, dst), s"failed to move DV files into $dst")
           writeBase(conf, table, p, marker, bases(p))
         }
+        // (4) UPDATE's post-images: one more write, into the same markers
+        postImages.foreach(VersionedTables.writeDataVersioned(_, table, marker))
+        (affected, matchedRows)
       } finally { fs.delete(tmp, true); () }
 
       val ops: List[TableOperation] = affected.flatMap(p => List(
@@ -744,6 +756,6 @@ object DeleteVectors {
       val (tv, changes) = engine.versioned.commitIf(
         table.name, TableUpdate(userId, message, java.time.Instant.now(), ops), head)
       DvDeleteResult(tv, changes, affected, matchedRows)
-    } finally { matched.unpersist(blocking = false); () }
+    } finally { if (set.isDefined) matched.unpersist(blocking = false); () }
   }
 }

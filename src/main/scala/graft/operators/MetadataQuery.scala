@@ -65,8 +65,11 @@ object MetadataQuery {
   def summarize(
       engine: VersionedTables,
       table: TableDefinition,
-      columns: Seq[String]): DataFrame =
-    summarizeVersion(engine, table, engine.tracker.currentVersion(table.name), columns)
+      columns: Seq[String]): DataFrame = {
+    val hs = engine.tracker.headState(table.name)
+    summarizeVersion(engine, table, hs.version, columns,
+      VersionedTables.parseSchemaJson(hs.schemaJson))
+  }
 
   /** Fold `version` ENTIRELY from manifests — `None` unless every file of
     * every partition is metadata-answerable for every requested column
@@ -172,6 +175,10 @@ object MetadataQuery {
 
   /** [[summarize]] at any pinned state — time travel included (manifests
     * are per version label, so history folds exactly like the head).
+    * `schemaHint` is the schema the log recorded at the pinned commit
+    * ([[VersionedTables.schemaHintAt]]; None for a history without one):
+    * the residue scan and the typing read plan under it instead of
+    * inferring the schema from footers.
     *
     * Requested PARTITION columns deliberately route through the residue
     * scan even though [[foldCoveredSelected]] could fold their values
@@ -185,7 +192,8 @@ object MetadataQuery {
       engine: VersionedTables,
       table: TableDefinition,
       version: TableVersion,
-      columns: Seq[String]): DataFrame = {
+      columns: Seq[String],
+      schemaHint: Option[StructType]): DataFrame = {
     val spark = engine.spark
     val cols = normalized(columns)
     val s = split(engine, table, version, cols, cols.toSet)
@@ -195,7 +203,7 @@ object MetadataQuery {
     // not answer; its result schema also types any column the manifests
     // don't know (partition and undeclared columns)
     val residue: Option[(Row, StructType)] = s.residue.map { rv =>
-      val df = engine.readVersion(table, rv)
+      val df = engine.readVersion(table, rv, schemaHint)
       val missing = cols.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c)))
       if (missing.nonEmpty) throw new IllegalArgumentException(
         s"column(s) ${missing.mkString(", ")} not in table " +
@@ -211,7 +219,7 @@ object MetadataQuery {
     // version state): the version's own read schema — emptyLike recovers
     // it from the table layout without touching the covered files
     lazy val versionSchema: StructType =
-      StructType(engine.readVersion(table, version).schema
+      StructType(engine.readVersion(table, version, schemaHint).schema
         .filterNot(_.name == Version.VersionColumn).toArray)
     val colTypes: Map[String, DataType] = cols.map { c =>
       c -> s.colTypes.getOrElse(c, residue match {

@@ -1612,7 +1612,7 @@ object TableStats {
       table: TableDefinition,
       version: TableVersion,
       predicate: Column,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+      schemaHint: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     // deletion-vector partitions split out and skip-plan through their BASE
     // versions' manifests (deletes only remove rows, so base stats/Blooms
     // stay conservative — false positives at worst); the kept file subset
@@ -1652,7 +1652,7 @@ object TableStats {
           case (Some(a), None)    => a
           case (None, Some(b))    => b
           case (None, None) =>
-            val empty = engine.readVersion(table, PartitionedTableVersion(Map.empty))
+            val empty = engine.readVersion(table, PartitionedTableVersion(Map.empty), schemaHint)
             if (empty.columns.isEmpty) empty else empty.filter(predicate)
         }
       case _ => ()
@@ -1662,14 +1662,14 @@ object TableStats {
         pvs.nonEmpty && pvs.valuesIterator.contains(Version.Unversioned)
       case _ => false
     }
-    if (mixedAdopted) return engine.readVersion(table, version).filter(predicate)
+    if (mixedAdopted) return engine.readVersion(table, version, schemaHint).filter(predicate)
     val decision = planRead(engine, table, version, predicate)
     if (decision.paths.isEmpty) {
       val empty = engine.readVersion(table,
         version match {
           case _: PartitionedTableVersion => PartitionedTableVersion(Map.empty)
           case _: SnapshotTableVersion    => PartitionedTableVersion(Map.empty)
-        })
+        }, schemaHint)
       return if (empty.columns.isEmpty) empty else empty.filter(predicate)
     }
     val reader = engine.spark.read.format(table.format.name).options(table.options)

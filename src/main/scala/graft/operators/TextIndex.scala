@@ -5,6 +5,7 @@ import graft.operators.VersionedTables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * A persisted inverted (BM25) text index as a VERSIONED table — the lexical
@@ -34,9 +35,9 @@ import org.apache.spark.sql.functions._
  *    contribution chain) — [[TextIndexSpec]] pins `search(index)` row- and
  *    score-identical to [[TextSearch.bm25TopK]] over the indexed corpus.
  *
- * Head lookups go through the tracker's O(1) `currentRef` (one head-file
- * read / one indexed SELECT), never a history materialization — a
- * 100k-delivery index must not pay O(history) per query.
+ * Head pins go through the tracker's bounded `headState` (fold checkpoint
+ * + commit tail), never a history materialization — a 100k-delivery index
+ * must not pay O(history) per query.
  *
  * Assumes deliveries carry disjoint `doc_id`s (the ingestion-dedup
  * operators are the upstream guard); a duplicated id would double-count its
@@ -94,8 +95,8 @@ object TextIndex {
     * must not silently mis-prune). */
   private def statsOf(
       engine: VersionedTables, table: TableDefinition,
-      pinned: TableVersion): (Long, Long, Int) = {
-    val rows = readBucketsOf(engine, table, pinned, _ == StatsBucket)
+      pinned: TableVersion, hint: Option[StructType]): (Long, Long, Int) = {
+    val rows = readBucketsOf(engine, table, pinned, hint, _ == StatsBucket)
       .agg(sum(col("doc_id")).as("n"), sum(col("tf")).as("t"),
         min(col("dl")).as("bmin"), max(col("dl")).as("bmax"))
       .collect()(0)
@@ -107,16 +108,18 @@ object TextIndex {
     (rows.getLong(0), if (rows.isNullAt(1)) 0L else rows.getLong(1), rows.getLong(2).toInt)
   }
 
-  /** Pruned read of one pinned version. The index contract guarantees a
+  /** Pruned read of one pinned version, planned under `hint` (the schema
+    * recorded at the pin — see [[VersionedTables.pin]]). The index contract guarantees a
     * partitioned version (buildIndex/addBatch enforce the schema); anything
     * else is a corrupted table and must not silently read everything. */
   private def readBucketsOf(
       engine: VersionedTables, table: TableDefinition,
-      pinned: TableVersion, keep: String => Boolean): DataFrame = pinned match {
+      pinned: TableVersion, hint: Option[StructType],
+      keep: String => Boolean): DataFrame = pinned match {
     case PartitionedTableVersion(pvs) =>
       engine.readVersion(table, PartitionedTableVersion(pvs.filter { case (p, _) =>
         p.columnValues.exists(cv => cv.column.name == BucketCol && keep(cv.value))
-      }))
+      }), hint)
     case other =>
       throw new IllegalStateException(
         s"${table.name} resolved to a non-partitioned version ($other) — not a text index")
@@ -166,8 +169,7 @@ object TextIndex {
       userId: UserId = UserId("graft"),
       message: String = "add text index batch"): (TableVersion, TableChanges) = {
     requireIndexSchema(table)
-    val checkedHead = engine.tracker.currentRef(table.name)
-    val pinned = engine.versionAt(table.name, checkedHead)
+    val (checkedHead, pinned, hint) = engine.pin(table.name, None)
     val existing = pinned match {
       case PartitionedTableVersion(pvs) =>
         pvs.keys.flatMap(_.columnValues.collect {
@@ -180,7 +182,7 @@ object TextIndex {
     require(!existing.contains(batchLabel),
       s"batch label '$batchLabel' already exists in ${table.name} — " +
         "reusing it would overwrite that delivery's partitions")
-    val (_, _, buckets) = statsOf(engine, table, pinned)
+    val (_, _, buckets) = statsOf(engine, table, pinned, hint)
     postingsOf(docs, idCol, textCol, buckets, batchLabel)
       .repartition(col(BucketCol), col(BatchCol))
       .versionedInsertIntoIf(engine, table, userId, message, checkedHead)
@@ -204,10 +206,9 @@ object TextIndex {
       userId: UserId = UserId("graft"),
       message: String = "compact text index batches"): (TableVersion, TableChanges) = {
     requireIndexSchema(table)
-    val head = engine.tracker.currentRef(table.name)
-    val pinned = engine.versionAt(table.name, head)
-    val (_, _, buckets) = statsOf(engine, table, pinned)
-    val all = engine.readVersion(table, pinned)
+    val (head, pinned, hint) = engine.pin(table.name, None)
+    val (_, _, buckets) = statsOf(engine, table, pinned, hint)
+    val all = engine.readVersion(table, pinned, hint)
     val posted = all.filter(col(BucketCol) =!= StatsBucket)
       .withColumn(BatchCol, lit(batchLabel))
     val stats = all.filter(col(BucketCol) === StatsBucket)
@@ -243,9 +244,8 @@ object TextIndex {
     val spark = engine.spark
     import spark.implicits._
 
-    val pinned = engine.versionAt(table.name,
-      at.getOrElse(engine.tracker.currentRef(table.name)))
-    val (nDocs, totTok, buckets) = statsOf(engine, table, pinned)
+    val (_, pinned, hint) = engine.pin(table.name, at)
+    val (nDocs, totTok, buckets) = statsOf(engine, table, pinned, hint)
     require(nDocs > 0, s"${table.name} indexes no documents at this version")
 
     // the terms' buckets, evaluated through the same xxhash64 the build used
@@ -259,7 +259,7 @@ object TextIndex {
     // that's a large fraction of the corpus; a checkpoint here would be the
     // operator's only corpus-sized buffer)
     val hits = ScaleTools.filterInValues(
-      readBucketsOf(engine, table, pinned, termBuckets.contains), "tok", terms)
+      readBucketsOf(engine, table, pinned, hint, termBuckets.contains), "tok", terms)
 
     val dfMap = hits.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

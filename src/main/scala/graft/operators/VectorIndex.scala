@@ -4,6 +4,7 @@ import graft.core._
 import graft.operators.VersionedTables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * A persisted IVF (inverted-file) ANN index as a VERSIONED, cell-partitioned
@@ -104,8 +105,9 @@ object VectorIndex {
     * query probe and the append assignment so both always use the exact
     * geometry their pinned commit carries. */
   private def centroidsOf(
-      engine: VersionedTables, table: TableDefinition, pinned: TableVersion): Array[Array[Float]] =
-    readCellsOf(engine, table, pinned, _ == CentroidCell)
+      engine: VersionedTables, table: TableDefinition, pinned: TableVersion,
+      hint: Option[StructType]): Array[Array[Float]] =
+    readCellsOf(engine, table, pinned, hint, _ == CentroidCell)
       .select(col("vec_id").cast("int"), col("embedding"))
       .collect()
       .sortBy(_.getInt(0))
@@ -113,12 +115,12 @@ object VectorIndex {
 
   private def readCellsOf(
       engine: VersionedTables, table: TableDefinition, pinned: TableVersion,
-      keep: String => Boolean): DataFrame = pinned match {
+      hint: Option[StructType], keep: String => Boolean): DataFrame = pinned match {
     case PartitionedTableVersion(pvs) =>
       engine.readVersion(table, PartitionedTableVersion(pvs.filter { case (p, _) =>
         p.columnValues.exists(cv => cv.column.name == CellCol && keep(cv.value))
-      }))
-    case snap => engine.readVersion(table, snap)
+      }), hint)
+    case snap => engine.readVersion(table, snap, hint)
   }
 
   /** How far past the index's own mean assignment distance a new batch may
@@ -157,8 +159,7 @@ object VectorIndex {
       message: String = "add ivf index batch"): (TableVersion, TableChanges) = {
     requireIndexSchema(table)
     require(batchLabel != CentroidCell, s"batch label '$CentroidCell' is reserved")
-    val checkedHead = engine.tracker.currentRef(table.name)
-    val pinned = engine.versionAt(table.name, checkedHead)
+    val (checkedHead, pinned, hint) = engine.pin(table.name, None)
     val existing = pinned match {
       case PartitionedTableVersion(pvs) =>
         pvs.keys.flatMap(_.columnValues.collect {
@@ -171,7 +172,7 @@ object VectorIndex {
     require(!existing.contains(batchLabel),
       s"batch label '$batchLabel' already exists in ${table.name} — " +
         "reusing it would overwrite that delivery's partitions")
-    val centroids = centroidsOf(engine, table, pinned)
+    val centroids = centroidsOf(engine, table, pinned, hint)
     require(centroids.nonEmpty,
       s"${table.name} carries no centroid partition at this version — build the index first")
 
@@ -187,7 +188,7 @@ object VectorIndex {
     // INDEXED vectors to their assigned centroid — a guard, not a statistic.
     val indexMean: Double =
       if (maxDriftFactor.isPosInfinity) 0.0
-      else readCellsOf(engine, table, pinned, _ != CentroidCell).limit(driftSampleSize)
+      else readCellsOf(engine, table, pinned, hint, _ != CentroidCell).limit(driftSampleSize)
         .select(col("embedding").as("__v"),
           Similarity.nearestCellId(col("embedding"), centroids).as("__c"))
         .agg(avg(distToAssigned(col("__v"), col("__c")))).collect()(0).getDouble(0)
@@ -247,9 +248,8 @@ object VectorIndex {
       userId: UserId = UserId("graft"),
       message: String = "compact ivf index batches"): (TableVersion, TableChanges) = {
     requireIndexSchema(table)
-    val head = engine.tracker.currentRef(table.name)
-    val pinned = engine.versionAt(table.name, head)
-    engine.readVersion(table, pinned)
+    val (head, pinned, hint) = engine.pin(table.name, None)
+    engine.readVersion(table, pinned, hint)
       .drop(BatchCol)
       .withColumn(BatchCol, lit(batchLabel))
       .repartition(col(CellCol), col(BatchCol))
@@ -271,13 +271,12 @@ object VectorIndex {
       at: Option[CommitId] = None): DataFrame = {
     // pin one version for the whole query: centroids and cells must come
     // from the same index generation even if a rebuild lands concurrently.
-    // currentRef is the tracker's O(1) head probe — a long-lived index must
-    // not pay a history materialization per query
-    val pinned = engine.versionAt(table.name,
-      at.getOrElse(engine.tracker.currentRef(table.name)))
+    // (bounded: a long-lived index must not pay a history materialization
+    // per query)
+    val (_, pinned, hint) = engine.pin(table.name, at)
 
     val centroidDf = broadcast(
-      readCellsOf(engine, table, pinned, _ == CentroidCell)
+      readCellsOf(engine, table, pinned, hint, _ == CentroidCell)
         .select(col("vec_id").cast("int").as(CellCol), col("embedding").as("centroid")))
 
     // materialize the probe assignment once: it is both collected (to decide
@@ -291,7 +290,7 @@ object VectorIndex {
     // the probed cells decide which index partitions are LISTED at all
     val probedCells: Set[String] =
       probes.select(CellCol).distinct().collect().map(_.getString(0)).toSet
-    val cand = readCellsOf(engine, table, pinned, probedCells.contains)
+    val cand = readCellsOf(engine, table, pinned, hint, probedCells.contains)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
         col(CellCol).cast("string").as(CellCol))
 

@@ -97,10 +97,14 @@ object VersionedDml {
     }
 
     // pin everything to one head snapshot (headState: O(partitions + tail),
-                                                                       // never a history replay); the commit CASes on it
+    // never a history replay); the commit CASes on it
     val state = engine.tracker.headState(table.name)
     val head = state.head
     val snapshot = state.version
+    // the schema the log recorded AT the pinned head: every read below
+    // plans under it instead of inferring from footers (a Spark job per
+    // read); histories without a record infer
+    val recorded = VersionedTables.parseSchemaJson(state.schemaJson)
     // only TRUE matches (SQL three-valued DELETE/UPDATE WHERE)
     val matchCond = coalesce(predicate, lit(false))
     val now = java.time.Instant.now()
@@ -122,7 +126,7 @@ object VersionedDml {
 
     snapshot match {
       case SnapshotTableVersion(_) =>
-        val current = engine.readVersion(table, snapshot)
+        val current = engine.readVersion(table, snapshot, recorded)
         if (current.columns.isEmpty)
           return DmlResult(snapshot, TableChanges.empty, Nil, Nil)
         if (current.filter(matchCond).limit(1).collect().isEmpty)
@@ -150,12 +154,10 @@ object VersionedDml {
         val candidates = TableStats.partitionsMayMatch(engine, table, pvs, predicate)
         if (candidates.isEmpty) return DmlResult(snapshot, TableChanges.empty, Nil, Nil)
         // (2) one persisted read of the candidate slice serves BOTH match
-        // discovery and the rewrite. The log-recorded schema (when present)
-        // both skips the slice footer-merge AND makes the rewrite carry the
-        // table's full union shape on evolved tables.
-        // the hint AT THE PINNED HEAD is exactly headState's resolved schema
-        val slice = engine.readVersion(table, PartitionedTableVersion(candidates),
-            if (table.mergesSchema) VersionedTables.parseSchemaJson(state.schemaJson) else None)
+        // discovery and the rewrite. The recorded schema skips the slice's
+        // footer inference AND makes the rewrite carry the table's full
+        // union shape on evolved tables.
+        val slice = engine.readVersion(table, PartitionedTableVersion(candidates), recorded)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val touched = VersionedTables.partitionValues(

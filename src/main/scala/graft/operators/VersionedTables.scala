@@ -85,6 +85,20 @@ final class VersionedTables(
     readVersion(table, hs.version, VersionedTables.parseSchemaJson(hs.schemaJson))
   }
 
+  /** One pinned commit for a call that reads several times:
+    * (commit, visible version, schema hint). The head comes from the
+    * bounded [[graft.core.VersionTracker.headState]], with the schema the
+    * log recorded there; a historical `at` resolves through the bounded
+    * [[versionAt]], which carries no schema record, so its reads infer. */
+  private[operators] def pin(
+      table: TableName, at: Option[CommitId]): (CommitId, TableVersion, Option[StructType]) =
+    at match {
+      case Some(id) => (id, versionAt(table, id), None)
+      case None =>
+        val hs = tracker.headState(table)
+        (hs.head, hs.version, VersionedTables.parseSchemaJson(hs.schemaJson))
+    }
+
   /** The table's visible state as of commit `id` (errors on unknown ids).
     * Bounded in the persistent stores when `id` is past the fold boundary. */
   def versionAt(table: TableName, id: CommitId): TableVersion =
@@ -454,9 +468,12 @@ final class VersionedTables(
             val tv =
               if (table.isSnapshot) SnapshotTableVersion(version)
               else PartitionedTableVersion(adds.toMap)
-            // same read path the schema-drift guard samples with, so the
-            // shape recorded at publish matches later guard comparisons
-            val schema = readVersion(table, tv).schema
+            // the schema the stage recorded, else the head's record (a stage
+            // that recorded none matched it); a stage re-attached without its
+            // manifest has no record of its own and reads its footers
+            val recorded = ops.collectFirst { case TableOperation.SetTableSchema(j) => j }
+              .orElse(fromManifest.flatMap(_ => tracker.headState(table.name).schemaJson))
+            val schema = readVersion(table, tv, VersionedTables.parseSchemaJson(recorded)).schema
             Right(VersionedTables.StagedWrite(this, table, userId, message, version, ops, schema,
               manifested = fromManifest.isDefined))
           }
@@ -632,28 +649,6 @@ final class VersionedTables(
       case snap: SnapshotTableVersion => snap
     }
 
-  /** Schema-drift guard for PARTIAL writes: the engine has no schema
-    * evolution (reference-faithful — README.md:48-50 scopes it out), so a
-    * `versionedInsertInto` whose dataset schema differs from the table's
-    * would silently create MIXED-schema partitions that break every later
-    * union read. Compares non-partition columns by (lowercased name,
-    * catalog type) — order and nullability differences are fine; a rename,
-    * drop, add, or retype fails loudly. Exempt by design, because neither
-    * can ever mix schemas in one visible state: `versionedReplaceAll`
-    * (rewrites the whole visible table — the schema-change path) and
-    * SNAPSHOT tables (every insert replaces the entire table; reads load
-    * exactly one self-contained version dir).
-    *
-    * Cost: one SINGLE-partition (or snapshot) sample read — one directory
-    * listing + one footer, O(1) in table size, only on writes to non-empty
-    * tables.
-    *
-    * Applies to SELF-DESCRIBING formats only (parquet, orc): their footers
-    * carry the written types, so an existing-vs-incoming mismatch is real
-    * drift and a mixed union read genuinely breaks. Text formats (csv,
-    * json) round-trip through lossy inference — a written bigint re-infers
-    * as int — so comparing inferred types would flag false drift; they
-    * keep the reference's caveat-emptor behavior. */
   /** (head commit, verified shape) per table: the schema AS OF a given head
     * is immutable (every write moves the head), so a matching head+shape
     * pair lets repeat writers — fixtures, compaction, per-batch ingestion —
@@ -677,9 +672,36 @@ final class VersionedTables(
       shape: org.apache.spark.sql.types.StructType): Unit =
     schemaShapeCache.put(table.name, (head, schemaShape(table, shape)))
 
-  /** Verify `df`'s column shape against the table's current schema and
-    * return the head commit the verification was performed AT (None when the
-    * guard doesn't apply — snapshot tables, non-columnar formats).
+  /** Schema-drift guard for PARTIAL writes: the engine has no schema
+    * evolution (reference-faithful — README.md:48-50 scopes it out), so a
+    * `versionedInsertInto` whose dataset schema differs from the table's
+    * would silently create MIXED-schema partitions that break every later
+    * union read. Compares non-partition columns by (lowercased name,
+    * catalog type) — order and nullability differences are fine; a rename,
+    * drop, add, or retype fails loudly. Exempt by design, because neither
+    * can ever mix schemas in one visible state: `versionedReplaceAll`
+    * (rewrites the whole visible table — the schema-change path) and
+    * SNAPSHOT tables (every insert replaces the entire table; reads load
+    * exactly one self-contained version dir).
+    *
+    * Source: the schema the commit log recorded at the pinned head
+    * ([[graft.core.TableOperation.SetTableSchema]]) whenever the history
+    * carries one — no file is opened and no Spark job runs. Histories
+    * without a record (adopted, imported, pre-upgrade) compare against
+    * their data files: one SINGLE-partition sample (one directory listing +
+    * one footer, O(1) in table size) on uniform tables, the footer-merged
+    * union on mergeSchema tables. Either way only writes to non-empty
+    * tables are checked.
+    *
+    * Applies to SELF-DESCRIBING formats only (parquet, orc): their footers
+    * carry the written types, so an existing-vs-incoming mismatch is real
+    * drift and a mixed union read genuinely breaks. Text formats (csv,
+    * json) round-trip through lossy inference — a written bigint re-infers
+    * as int — so comparing inferred types would flag false drift; they
+    * keep the reference's caveat-emptor behavior.
+    *
+    * Returns the head commit the verification was performed AT (None when
+    * the guard doesn't apply — snapshot tables, non-columnar formats).
     *
     * CONCURRENCY: the check is read-then-act. The guarantee "no mixed-schema
     * partitions" therefore holds for single-writer tables and for CAS'd
@@ -718,20 +740,19 @@ final class VersionedTables(
       case _ => None // empty table: the first write defines the schema
     }
     sample.foreach { sv =>
-      // a mergeSchema table may legitimately hold MIXED file schemas
-      // (additive evolution) — a one-partition sample would then flag a
-      // producer writing the table's CURRENT (union) schema as drift, with
-      // the outcome depending on which partition sorts first. Compare
-      // against the UNION schema instead. The union comes from the COMMIT
-      // LOG when the history recorded one (SetTableSchema — zero footer
-      // reads); only histories that never recorded a schema (adopted /
-      // imported / pre-upgrade) pay the footer-merge read. Uniform-schema
-      // tables keep the cheap one-partition sample.
+      // the COMMIT LOG's record (SetTableSchema) is the table's schema
+      // whenever the history carries one: schemaOpsFor records exactly the
+      // shape the files of each schema-defining commit carry, and on a
+      // mergeSchema table the record is the UNION a producer of the current
+      // schema writes (a one-partition sample of a mixed-schema table would
+      // flag it as drift, depending on which partition sorts first). Only
+      // histories that never recorded a schema (adopted / imported /
+      // pre-upgrade) read data files: the footer-merge union on mergeSchema
+      // tables, the one-partition sample on uniform ones.
       val existing = schemaShape(table,
-        if (table.mergesSchema)
-          VersionedTables.parseSchemaJson(st.schemaJson)
-            .getOrElse(readVersion(table, st.version).schema)
-        else readVersion(table, sv).schema)
+        VersionedTables.parseSchemaJson(st.schemaJson).getOrElse(
+          if (table.mergesSchema) readVersion(table, st.version, None).schema
+          else readVersion(table, sv, None).schema))
       // an empty existing shape means the sample was unreadable (e.g. an
       // adopted partition whose files are gone) — nothing trustworthy to
       // compare against, so don't fabricate a drift error (and don't
@@ -783,10 +804,12 @@ final class VersionedTables(
     * mergeSchema footer-merge over every loaded file — with the schema the
     * commit log recorded; results are identical (evolution is additive and
     * the log is written by every schema-changing commit), only planning
-    * I/O shrinks. No hint ⇒ inference, exactly as before. */
+    * I/O shrinks. The hint has no default: a caller passes the record at
+    * the state it reads, or None (adopted or unversioned data, a history
+    * without a record), which infers the schema from footers. */
   def readVersion(
       table: TableDefinition, version: TableVersion,
-      schemaHint: Option[StructType] = None): DataFrame = version match {
+      schemaHint: Option[StructType]): DataFrame = version match {
     case SnapshotTableVersion(v) =>
       if (v == Version.Unversioned)
         // pre-adoption sentinel: data (if any) lives unversioned DIRECTLY at

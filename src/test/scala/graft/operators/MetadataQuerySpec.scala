@@ -90,7 +90,8 @@ class MetadataQuerySpec extends AnyFlatSpec with Matchers {
     atHead.getLong(2) shouldBe 5049L
 
     val atC0 = MetadataQuery.summarizeVersion(engine, table,
-      engine.versionAt(table.name, c0), Seq("id")).head()
+      engine.versionAt(table.name, c0), Seq("id"),
+      engine.schemaHintAt(table, engine.tracker.tableState(table.name), c0)).head()
     atC0.getLong(0) shouldBe 1600L
     atC0.getLong(2) shouldBe 399L
   }
@@ -240,7 +241,7 @@ class MetadataQuerySpec extends AnyFlatSpec with Matchers {
     // a state with no visible partitions (what a table looks like before
     // its first commit, or after every partition is removed)
     val got = MetadataQuery.summarizeVersion(engine, table,
-      PartitionedTableVersion(Map.empty), Seq("id")).head()
+      PartitionedTableVersion(Map.empty), Seq("id"), None).head()
     got.getLong(0) shouldBe 0L
     got.isNullAt(1) shouldBe true
     got.isNullAt(2) shouldBe true
