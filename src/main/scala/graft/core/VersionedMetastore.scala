@@ -157,11 +157,10 @@ final class VersionedMetastore(
           case pv => pv
         }
         val n = pvs.count { case (_, v) => Version.isDeleteMarker(v) }
-        System.err.println(
-          s"[graft] WARNING: catalog sync of '${table.fullyQualifiedName}' substitutes " +
-            s"BASE versions for $n deletion-vector partition(s) — external readers " +
-            "through the catalog see PRE-DELETE (and pre-update) rows until the DVs " +
-            "are folded (compact / SQL OPTIMIZE)")
+        // external readers through the catalog see PRE-DELETE (and
+        // pre-update) rows until the DVs are folded (compact / SQL OPTIMIZE)
+        GraftLog.warn("catalog_sync_dv_base_versions", "table" -> table.fullyQualifiedName,
+          "dv_partitions" -> n, "catalog_shows" -> "pre_delete_rows")
         PartitionedTableVersion(substituted)
       case other => other
     }

@@ -303,13 +303,7 @@ object DeleteVectors {
     val stripe = dvRowCountStripes(math.floorMod(key.hashCode, dvRowCountStripes.length))
     stripe.synchronized {
       Option(stripe.get(key)).map(_.longValue).getOrElse {
-        val dir = new org.apache.hadoop.fs.Path(dvDir(table, p, marker))
-        val fs = dir.getFileSystem(conf)
-        // the same file set a Spark parquet read of the directory uses:
-        // every non-hidden file (no extension filter — Spark applies none)
-        val rows = fs.listStatus(dir).iterator
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
+        val rows = dvDataFiles(conf, table, p, marker).iterator
           .map { s =>
             val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
@@ -319,6 +313,19 @@ object DeleteVectors {
         rows
       }
     }
+  }
+
+  /** The data files of a marker's DV sidecar: every non-hidden file of its
+    * `_dv` directory (no extension filter — a Spark read of the directory
+    * applies none). */
+  private def dvDataFiles(
+      conf: org.apache.hadoop.conf.Configuration,
+      table: TableDefinition, p: Partition, marker: Version): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val dir = new org.apache.hadoop.fs.Path(dvDir(table, p, marker))
+    dir.getFileSystem(conf).listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
   }
 
   private def markerMeta(
@@ -365,6 +372,21 @@ object DeleteVectors {
       table: TableDefinition, p: Partition, marker: Version): Boolean =
     markerMeta(conf, table, p, marker)._2
 
+  /** The DV entries of `markers`, normalized to root-relative paths. The
+    * sidecars' data files are listed and loaded by their explicit paths:
+    * Spark treats the `_dv` directory name as hidden, so loading the
+    * directory would rely on Spark keeping explicitly named roots, with a
+    * warning per read. */
+  private def dvEntries(
+      spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
+      table: TableDefinition, markers: Seq[(Partition, Version)], rootPrefix: String): DataFrame = {
+    val files = markers.flatMap { case (p, m) =>
+      dvDataFiles(conf, table, p, m).map(_.getPath.toString)
+    }
+    spark.read.schema(DvSchema).parquet(files: _*)
+      .select(normalizeDvPath(col("file_path"), rootPrefix).as("file_path"), col("row_index"))
+  }
+
   /** Read the given DELETION-VECTOR partitions: base data files PLUS any
     * update-marker data files, minus the DV positions — partition columns
     * recovered by discovery exactly like the plain read path (one load for
@@ -394,7 +416,6 @@ object DeleteVectors {
       VersionedTables.uriToLoadPath(
         VersionPaths.pathFor(p.resolvePath(table.location), readBase(conf, table, p, m)))
     }) ++ markerDataDirs
-    val dvPaths = sorted.map { case (p, m) => VersionedTables.uriToLoadPath(dvDir(table, p, m)) }
     val rootPrefix = qualifiedRootPrefix(conf, table.location)
     val reader = engine.spark.read.format(table.format.name).options(table.options)
     val data = schemaHint.fold(reader)(h =>
@@ -403,9 +424,7 @@ object DeleteVectors {
       .load(dataPaths: _*)
       .withColumn(FileCol, relativeToRoot(col("_metadata.file_path"), rootPrefix))
       .withColumn(PosCol, col("_metadata.row_index"))
-    val dv = engine.spark.read.schema(DvSchema).parquet(dvPaths: _*)
-      .select(normalizeDvPath(col("file_path"), rootPrefix).as("file_path"),
-        col("row_index"))
+    val dv = dvEntries(engine.spark, conf, table, sorted, rootPrefix)
     data.join(gateBroadcast(engine.spark, dv, markerDvBytes(conf, table, sorted)),
         data(FileCol) === dv("file_path") && data(PosCol) === dv("row_index"),
         "left_anti")
@@ -596,15 +615,10 @@ object DeleteVectors {
     val oldMarkers = candidates.toSeq.collect {
       case (p, m) if Version.isDeleteMarker(m) => (p, m)
     }.sortBy(_._1.toPath)
-    def dvEntries(markers: Seq[(Partition, Version)]): DataFrame =
-      spark.read.schema(DvSchema)
-        .parquet(markers.map { case (p, m) => VersionedTables.uriToLoadPath(dvDir(table, p, m)) }: _*)
-        .select(normalizeDvPath(col("file_path"), rootPrefix).as("file_path"),
-          col("row_index"))
     val live =
       if (oldMarkers.isEmpty) raw
       else {
-        val dv = dvEntries(oldMarkers)
+        val dv = dvEntries(spark, conf, table, oldMarkers, rootPrefix)
         raw.join(gateBroadcast(spark, dv, markerDvBytes(conf, table, oldMarkers)),
           raw(FileCol) === dv("file_path") && raw(PosCol) === dv("row_index"), "left_anti")
       }
@@ -631,7 +645,7 @@ object DeleteVectors {
           col(FileCol).as("file_path")) :+ col(PosCol).as("row_index"): _*)
         .observe(obs, count(lit(1)).as("n"), collect_set(struct(partExprs: _*)).as("parts"))
       val carried: Seq[DataFrame] = oldMarkers.map { case (p, m) =>
-        val withCols = partCols.zipWithIndex.foldLeft(dvEntries(Seq(p -> m))) {
+        val withCols = partCols.zipWithIndex.foldLeft(dvEntries(spark, conf, table, Seq(p -> m), rootPrefix)) {
           case (df, (c, i)) =>
             val value = p.columnValues(i).value
             df.withColumn(c,

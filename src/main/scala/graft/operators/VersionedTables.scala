@@ -71,7 +71,8 @@ final class VersionedTables(
     * per-statement cost of reading a 100k-commit streaming-sink table is
     * O(partitions + tail), never a history materialization. Histories that
     * never recorded a schema (adopted, imported, pre-upgrade) infer it from
-    * the data files. */
+    * the data files. A head state of at most 1 MB reads as one partition
+    * (see [[readVersion]]). */
   def read(table: TableDefinition): DataFrame = {
     // The LOG-RECORDED schema (SetTableSchema) serves as the reader schema
     // whenever the history carries one — for ANY table, not just
@@ -108,7 +109,8 @@ final class VersionedTables(
     * catalog mutation (SURVEY §2.B `q_time_travel`). `keep` prunes the
     * partition set DRIVER-SIDE before any file listing, like
     * [[readPartitions]] — a one-day read of a 10-year table at a historical
-    * commit lists one day's files, not ten years'. */
+    * commit lists one day's files, not ten years'. A selection of at most
+    * 1 MB reads as one partition (see [[readVersion]]). */
   def readAt(
       table: TableDefinition, id: CommitId,
       keep: Partition => Boolean = _ => true): DataFrame = {
@@ -806,8 +808,34 @@ final class VersionedTables(
     * the log is written by every schema-changing commit), only planning
     * I/O shrinks. The hint has no default: a caller passes the record at
     * the state it reads, or None (adopted or unversioned data, a history
-    * without a record), which infers the schema from footers. */
+    * without a record), which infers the schema from footers.
+    *
+    * Layout rule, the read-side mirror of [[writeDataVersioned]]'s: when
+    * every leaf of the read is a file relation and their size estimate —
+    * the listed file bytes, known once the relation is built, so no extra
+    * I/O — is at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`
+    * (1 MB by default), the result is `coalesce(1)`ed: one scan partition,
+    * one task. Every version directory is immutable, so a small read costs
+    * per job and per task, not per row. One partition reports
+    * `SinglePartition`, which satisfies the `ClusteredDistribution` of a
+    * downstream aggregate, window or join, so their exchange and its second
+    * job disappear (AQE would coalesce a shuffle this small to one partition
+    * too; the rule decides before the first stage). Compute-heavy work over
+    * a small table then runs in one task: an explicit `repartition(n)`
+    * after the read restores the parallelism, since a shuffle repartition
+    * replaces the coalesce beneath it. Larger reads, and reads with any
+    * other leaf (an empty state), keep Spark's own split planning. Every
+    * read surface goes through here: [[read]], [[readAt]],
+    * [[readChangesBetween]], [[readChangesAt]], [[readPartitions]], SQL
+    * catalog reads and `VERSION AS OF`. */
   def readVersion(
+      table: TableDefinition, version: TableVersion,
+      schemaHint: Option[StructType]): DataFrame = {
+    val df = materialize(table, version, schemaHint)
+    if (VersionedTables.readsAsOneTask(df)) df.coalesce(1) else df
+  }
+
+  private def materialize(
       table: TableDefinition, version: TableVersion,
       schemaHint: Option[StructType]): DataFrame = version match {
     case SnapshotTableVersion(v) =>
@@ -1684,13 +1712,35 @@ object VersionedTables {
       case _: Generate | _: ObjectProducer | _: ObjectConsumer => true
       case n => n.expressions.exists(_.exists(_.isInstanceOf[PythonFuncExpression]))
     }
-    def freeStats(p: LogicalPlan): Boolean = p.collectLeaves().forall {
+    !callerFixedLayout(plan) && !mayUndercount(plan) && fitsOneTask(df) {
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation |
            _: LocalRelation | _: org.apache.spark.sql.execution.LogicalRDD |
            _: Range | _: OneRowRelation => true
       case _ => false
     }
-    !callerFixedLayout(plan) && !mayUndercount(plan) && freeStats(plan) &&
+  }
+
+  /** The layout rule of [[VersionedTables.readVersion]]: true when the
+    * read `df` should be one scan partition — every leaf is a file
+    * relation (whose size is the listed file bytes, known once the
+    * relation is built) and they sum to at most the one-task cutoff. */
+  private def readsAsOneTask(df: DataFrame): Boolean =
+    fitsOneTask(df) {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation.isInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+      case _ => false
+    }
+
+  /** The size predicate both layout rules share: every leaf of `df`'s
+    * analyzed plan passes `freeLeaf` (so asking for statistics builds no
+    * scan and reads no data), and the plan's size estimate is at most
+    * Spark's `spark.sql.adaptive.coalescePartitions.minPartitionSize` —
+    * the smallest partition AQE's coalescing leaves, so a shuffle of this
+    * size would be one partition too. */
+  private def fitsOneTask(df: DataFrame)(
+      freeLeaf: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Boolean): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.collectLeaves().forall(freeLeaf) &&
       plan.stats.sizeInBytes <= org.apache.spark.sql.GraftSqlBridge.sqlConf(df.sparkSession)
         .getConf(org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
   }

@@ -504,7 +504,8 @@ final class FileBackedVersionTracker(
          catch { case e: Exception => Left(e.toString) }) match {
           case Right(cp) => Some(cp)
           case Left(e) =>
-            System.err.println(s"[graft] ignoring corrupt state checkpoint $p: $e")
+            GraftLog.warn("corrupt_state_checkpoint", "path" -> p, "error" -> e,
+              "fallback" -> "commit_scan")
             None
         }
       }
@@ -643,7 +644,8 @@ final class FileBackedVersionTracker(
       dir: Path, head: CommitId, m: JsonCodecs.HeadManifest): Option[(CommitId, JsonCodecs.FoldDoc, List[TableUpdate])] =
     JsonCodecs.foldDocFromJson(read(new Path(dir, m.foldDoc.get))) match {
       case Left(e) =>
-        System.err.println(s"[graft] ignoring corrupt state fold ${m.foldDoc.get}: $e")
+        GraftLog.warn("corrupt_state_fold", "path" -> new Path(dir, m.foldDoc.get), "error" -> e,
+          "fallback" -> "listing")
         None
       case Right(doc) =>
         if (doc.lastCovered != m.lastCovered) None // torn manifest/doc pair
@@ -668,7 +670,8 @@ final class FileBackedVersionTracker(
     foldDoc.flatMap { p =>
       JsonCodecs.foldDocFromJson(read(p)) match {
         case Left(e) =>
-          System.err.println(s"[graft] ignoring corrupt state fold $p: $e")
+          GraftLog.warn("corrupt_state_fold", "path" -> p, "error" -> e,
+            "fallback" -> "commit_replay")
           None
         case Right(doc) =>
           val commitFiles = statuses
@@ -798,7 +801,8 @@ final class FileBackedVersionTracker(
     try JsonCodecs.manifestFromJson(read(manifestPath(dir))) match {
       case Right(m) => Some(m)
       case Left(e) =>
-        System.err.println(s"[graft] ignoring corrupt head manifest in $dir: $e")
+        GraftLog.warn("corrupt_head_manifest", "dir" -> dir, "error" -> e,
+          "fallback" -> "listing")
         None
     } catch { case _: java.io.FileNotFoundException => None }
 
@@ -880,7 +884,7 @@ final class FileBackedVersionTracker(
         }
       } catch {
         // checkpointing is an optimization; a failure must never fail the commit
-        case e: Exception => System.err.println(s"[graft] state checkpoint failed for $dir: $e")
+        case e: Exception => GraftLog.warn("state_checkpoint_failed", "dir" -> dir, "error" -> e)
       }
     }
   }
@@ -922,7 +926,7 @@ final class FileBackedVersionTracker(
           tail.fold(Degraded)(t => JsonCodecs.HeadManifest(Some(foldName), lastCovered, t))))
       }
     } catch {
-      case e: Exception => System.err.println(s"[graft] head-manifest rewrite failed for $dir: $e")
+      case e: Exception => GraftLog.warn("head_manifest_rewrite_failed", "dir" -> dir, "error" -> e)
     }
 
   /** Local filesystems bypass the Hadoop ChecksumFileSystem layer (NIO

@@ -502,7 +502,8 @@ final class JdbcVersionTracker(
     }.headOption.flatMap { case (seq, lastId, json) =>
       JsonCodecs.foldDocFromJson(json) match {
         case Left(err) =>
-          System.err.println(s"[graft] ignoring corrupt JDBC state fold for '$table': $err")
+          GraftLog.warn("corrupt_state_fold", "store" -> "jdbc", "table" -> table, "error" -> err,
+            "fallback" -> "commit_replay")
           None
         case Right(doc) =>
           val head = target.getOrElse(queryIn(
@@ -564,8 +565,8 @@ final class JdbcVersionTracker(
       JsonCodecs.checkpointFromJson(json) match {
         case Right((_, updates)) => Some((seq, updates))
         case Left(err) =>
-          System.err.println(
-            s"[graft] ignoring corrupt JDBC state checkpoint for '$table': $err")
+          GraftLog.warn("corrupt_state_checkpoint", "store" -> "jdbc", "table" -> table,
+            "error" -> err, "fallback" -> "commit_scan")
           None
       }
     }
@@ -642,7 +643,7 @@ final class JdbcVersionTracker(
       // underlying transaction (lock timeout), the commit still fails at
       // conn.commit() — correctly, since the user's rows rolled back too.
       case e: Exception =>
-        System.err.println(s"[graft] JDBC state checkpoint failed for '$table': $e")
+        GraftLog.warn("state_checkpoint_failed", "store" -> "jdbc", "table" -> table, "error" -> e)
     }
 
   // ---- helpers ----

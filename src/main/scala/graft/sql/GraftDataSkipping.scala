@@ -130,7 +130,7 @@ final case class GraftMetadataAggregate(session: SparkSession) extends Rule[Logi
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, BindReferences, Cast, EvalMode, Literal}
   import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
-  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, Project}
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, Project, Repartition}
   import org.apache.spark.sql.internal.SQLConf
   import org.apache.spark.sql.types._
   import org.apache.spark.unsafe.types.UTF8String
@@ -158,8 +158,10 @@ final case class GraftMetadataAggregate(session: SparkSession) extends Rule[Logi
         rewriteGrouped(agg, groupingExprs, aggExprs, cond, entry).getOrElse(agg)
     }
 
-  /** The recorded relation, at most behind pure column pruning and an
-    * optional pushed-down Filter (conjoined if several). */
+  /** The recorded relation, at most behind pure column pruning, an
+    * optional pushed-down Filter (conjoined if several) and the
+    * one-partition coalesce a small `readVersion` puts on top (partitioning
+    * never changes an aggregate's answer). */
   private object FilteredScan {
     def unapply(p: LogicalPlan): Option[(Option[Expression], GraftScanRegistry.Entry)] =
       p match {
@@ -170,6 +172,7 @@ final case class GraftMetadataAggregate(session: SparkSession) extends Rule[Logi
           }
         case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
           unapply(child)
+        case Repartition(1, false, child) => unapply(child)
         case LFilter(c, child) =>
           unapply(child).map { case (inner, e) =>
             (Some(inner.fold(c)(And(c, _))), e)

@@ -84,6 +84,18 @@ class DeleteVectorsSpec extends AnyFlatSpec with Matchers {
     }
   }
 
+  it should "read its sidecars without Spark's ignored-paths warning" in {
+    val (engine, table) = newTable()
+    load(engine, table)
+    val logged = graft.LogCapture.warnings("org.apache.spark.sql.execution.datasources") {
+      engine.deleteWhereDV(table, col("k") % 7 === 0, UserId("t"), "dv %7")
+      engine.deleteWhereDV(table, col("k") % 11 === 0, UserId("t"), "dv %11")
+      engine.read(table).count() shouldBe
+        (0L until 1000L).count(k => k % 7 != 0 && k % 11 != 0)
+    }
+    logged.filter(_.contains("paths were ignored")) shouldBe empty
+  }
+
   it should "stack deletes via depth-1 rebase and time-travel honestly" in {
     val (engine, table) = newTable()
     load(engine, table)

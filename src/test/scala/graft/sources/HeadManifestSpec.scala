@@ -96,6 +96,22 @@ class HeadManifestSpec extends AnyFlatSpec with Matchers {
     r2.directoryListings.get() shouldBe 0L
   }
 
+  it should "report a corrupt manifest as one key=value WARN line on the graft logger" in {
+    val root = Files.createTempDirectory("graft-manifest-log-")
+    val w = tracker(root)
+    w.initTable(t, isSnapshot = false, u, "init", Instant.now())
+    commitN(w, 1 to 6)
+    Files.write(manifestFile(root), "not json".getBytes("UTF-8"))
+
+    val logged = graft.LogCapture.warnings("graft") {
+      tracker(root).currentVersion(t) shouldBe w.tableState(t).currentTableVersion
+    }
+    logged should have size 1
+    logged.head should startWith("WARN event=corrupt_head_manifest dir=")
+    logged.head should include("fallback=listing")
+    logged.head should not include "\n" // the parser's multi-line message is escaped
+  }
+
   it should "recreate a deleted manifest (legacy store upgrade) at the next checkpoint" in {
     val root = Files.createTempDirectory("graft-manifest-del-")
     val w = tracker(root)

@@ -7,7 +7,6 @@ import graft.operators.VersionedTables._
 
 import java.io.File
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.flatspec.AnyFlatSpec
@@ -35,35 +34,7 @@ class DmlJobCountSpec extends AnyFlatSpec with Matchers {
   private def rows(p: String, ks: Range): Seq[Row] =
     ks.map(k => Row(k.toLong, k * 7L, f"payload-$k%024d", p))
 
-  /** Call sites of the Spark jobs `body` starts (its own thread and the
-    * threads that inherit its job group, such as broadcast builders). */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"graft-job-count-${seq.incrementAndGet()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        // the result stage is created last and is named after the job's call site
-        val site = e.stageInfos.maxBy(_.stageId).name
-        seen.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, site))
-        ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job count law")
-      try body finally sc.clearJobGroup()
-      // listener events arrive in order: once a marker job started after
-      // the body is seen, so are all of the body's jobs
-      sc.setJobGroup(s"$group-end", "job count marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.asScala.exists(_._1 == s"$group-end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      seen.asScala.exists(_._1 == s"$group-end") shouldBe true
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.collect { case (g, site) if g == group => site }.toSeq
-  }
+  private def jobsOf(body: => Unit): Seq[String] = graft.SparkJobs.of(spark)(body)
 
   "SQL DML on a partitioned stats table" should
     "run only the jobs its data needs, and never infer a schema from footers" in {
